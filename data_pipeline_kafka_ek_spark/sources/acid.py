@@ -348,122 +348,181 @@ def _stats_range_boundaries(
     return bounds
 
 
-# rows buffered per parquet row group in the fused writer: large enough
+# rows buffered per parquet row group in the fused writers: large enough
 # that row-group min/max stats stay useful and dictionary pages amortize,
 # small enough that one buffered group never strains executor memory
 _FUSED_ROWGROUP_ROWS = 131_072
 
 
+class _PartFile:
+    """One task's parquet output file in a fresh commit directory — the
+    file protocol every writer kernel below shares. Opened lazily on the
+    first non-empty table under a name that is a pure function of the
+    partition id (``part-<pid>``), written through an attempt-unique
+    temp file and moved into place on close (atomic rename on
+    local/HDFS), so a retried task is last-wins and an empty partition
+    leaves no file. ``pyarrow.fs.FileSystem.from_uri`` inside the task
+    lets the same code write file:/, hdfs:/ or s3:/ directories.
+
+    ``kind`` (``add`` or ``cdc``) tags the file's record. With ``key``
+    set the file also folds its data-skipping stats over the tables it
+    writes (Delta's writer-side stats: a byproduct of the write, never a
+    rescan) — the key's non-NULL range and NULL count, and min/max/NULL
+    counts of ``skip_cols``."""
+
+    def __init__(
+        self, root_uri: str, kind: str, key: "str | None" = None, skip_cols=()
+    ):
+        self.root_uri = root_uri
+        self.kind = kind
+        self.key = key
+        self.skip_cols = list(skip_cols)
+        self.writer = None
+        self.buf: list = []
+        self.buffered = 0
+        self.rows = 0
+        self.null_keys = 0
+        self.key_lo = self.key_hi = None
+        self.mins: dict = {}
+        self.maxs: dict = {}
+        self.nulls = {c: 0 for c in self.skip_cols}
+
+    def write(self, tbl) -> None:
+        if tbl.num_rows == 0:
+            return
+        if self.writer is None:
+            import pyarrow.parquet as pq
+            from pyarrow import fs as pafs
+            from pyspark import TaskContext
+
+            self.fs, root = pafs.FileSystem.from_uri(self.root_uri)
+            pid = TaskContext.get().partitionId()
+            self.final = f"{root}/part-{pid:05d}.parquet"
+            self.tmp = f"{self.final}.{uuid.uuid4().hex}.tmp"
+            self.writer = pq.ParquetWriter(
+                self.tmp, tbl.schema, filesystem=self.fs
+            )
+        self.buf.append(tbl)
+        self.buffered += tbl.num_rows
+        if self.buffered >= _FUSED_ROWGROUP_ROWS:
+            self._flush()
+
+    def _flush(self) -> None:
+        import pyarrow as pa
+
+        if not self.buf:
+            return
+        tbl = pa.concat_tables(self.buf)
+        self.writer.write_table(tbl)
+        self.buf, self.buffered = [], 0
+        if self.key is not None:
+            self._fold(tbl)
+
+    def _fold(self, tbl) -> None:
+        import pyarrow.compute as pc
+
+        self.rows += tbl.num_rows
+        kc = tbl.column(self.key)
+        self.null_keys += kc.null_count
+        if kc.null_count < len(kc):
+            mm = pc.min_max(kc)
+            lo, hi = mm["min"].as_py(), mm["max"].as_py()
+            self.key_lo = lo if self.key_lo is None else min(self.key_lo, lo)
+            self.key_hi = hi if self.key_hi is None else max(self.key_hi, hi)
+        for c in self.skip_cols:
+            col = tbl.column(c)
+            self.nulls[c] += col.null_count
+            if col.null_count < len(col):
+                mm = pc.min_max(col)
+                lo, hi = mm["min"].as_py(), mm["max"].as_py()
+                self.mins[c] = lo if c not in self.mins else min(self.mins[c], lo)
+                self.maxs[c] = hi if c not in self.maxs else max(self.maxs[c], hi)
+
+    def close(self) -> "dict | None":
+        """Publish the file and return its record — ``kind`` and
+        ``path``, plus the stats fold when ``key`` is set — or None if
+        nothing was written."""
+        if self.writer is None:
+            return None
+        self._flush()
+        self.writer.close()
+        self.fs.move(self.tmp, self.final)
+        if self.key is None:
+            return {"kind": self.kind, "path": self.final}
+
+        def short(v):
+            # the <=64-char string rule (see _skip_cols): a long extreme
+            # records None, never a truncation
+            return None if isinstance(v, str) and len(v) > 64 else v
+
+        return {
+            "kind": self.kind,
+            "path": self.final,
+            "min_key": self.key_lo,
+            "max_key": self.key_hi,
+            "rows": self.rows,
+            "null_keys": self.null_keys,
+            "bytes": int(self.fs.get_file_info(self.final).size),
+            "stats": {
+                c: {
+                    "min": short(self.mins.get(c)),
+                    "max": short(self.maxs.get(c)),
+                    "nulls": int(self.nulls[c]),
+                }
+                for c in self.skip_cols
+            },
+        }
+
+
+def _run_writer(clustered: DataFrame, write_partition) -> "list[dict]":
+    """Run ``write_partition`` — a range partition's Arrow batches in,
+    the records of the :class:`_PartFile` s it closed out (None for a
+    file never opened) — over every partition as ONE job whose output
+    rows are those records."""
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        recs = [r for r in write_partition(batches) if r is not None]
+        if recs:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([json.dumps(r) for r in recs], pa.string())],
+                names=["stats"],
+            )
+
+    out = clustered.mapInArrow(kernel, "stats string").collect()
+    return [json.loads(r["stats"]) for r in out]
+
+
+def _add_action(r: dict) -> dict:
+    """A data file's stat record as a log ``add`` action."""
+    return {
+        "path": _canon_uri(r["path"]),
+        "min_key": r["min_key"],
+        "max_key": r["max_key"],
+        "rows": r["rows"],
+        "null_keys": r["null_keys"],
+        "bytes": r["bytes"],
+        "stats": r["stats"],
+    }
+
+
 def _fused_write_partitions(
     clustered: DataFrame, commit_dir: str, key: str, skip_cols: "list[str]"
 ) -> "list[dict]":
-    """The single write+stats job behind ``_write_data_files``: stream
-    every partition's Arrow batches into one parquet file while folding
-    the file's stats, and return the per-file stat records as the job
-    output. Uses ``pyarrow.fs.FileSystem.from_uri`` inside the task so
-    the same code path writes file:/, hdfs:/ or s3:/ commit dirs."""
-    import pyarrow as pa
+    """The single write+stats job behind ``_write_data_files``: every
+    range partition's task streams its Arrow batches into one parquet
+    file, folding the file's stats as it writes."""
 
     def _write_one_partition(batches):
-        import json as _json
-        import uuid as _uuid
+        import pyarrow as pa
 
-        import pyarrow as _pa
-        import pyarrow.compute as _pc
-        import pyarrow.parquet as _pq
-        from pyarrow import fs as _pafs
-        from pyspark import TaskContext
-
-        fsys, root = _pafs.FileSystem.from_uri(commit_dir)
-        writer = None
-        tmp = final = None
-        buf: list = []
-        buffered = 0
-        rows = 0
-        null_keys = 0
-        mins: dict = {}
-        maxs: dict = {}
-        nulls: dict = {c: 0 for c in skip_cols}
-        key_lo = key_hi = None
-
-        def _fold(tbl: "_pa.Table") -> None:
-            nonlocal rows, null_keys, key_lo, key_hi
-            rows += tbl.num_rows
-            kc = tbl.column(key)
-            null_keys += kc.null_count
-            if kc.null_count < len(kc):
-                mm = _pc.min_max(kc)
-                lo, hi = mm["min"].as_py(), mm["max"].as_py()
-                key_lo = lo if key_lo is None else min(key_lo, lo)
-                key_hi = hi if key_hi is None else max(key_hi, hi)
-            for c in skip_cols:
-                col = tbl.column(c)
-                nulls[c] += col.null_count
-                if col.null_count < len(col):
-                    mm = _pc.min_max(col)
-                    lo, hi = mm["min"].as_py(), mm["max"].as_py()
-                    mins[c] = lo if c not in mins else min(mins[c], lo)
-                    maxs[c] = hi if c not in maxs else max(maxs[c], hi)
-
-        def _flush() -> None:
-            nonlocal buf, buffered
-            if not buf:
-                return
-            tbl = _pa.Table.from_batches(buf)
-            writer.write_table(tbl)
-            _fold(tbl)
-            buf, buffered = [], 0
-
+        out = _PartFile(commit_dir, "add", key, skip_cols)
         for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            if writer is None:
-                pid = TaskContext.get().partitionId()
-                final = f"{root}/part-{pid:05d}.parquet"
-                tmp = f"{final}.{_uuid.uuid4().hex}.tmp"
-                writer = _pq.ParquetWriter(tmp, batch.schema, filesystem=fsys)
-            buf.append(batch)
-            buffered += batch.num_rows
-            if buffered >= _FUSED_ROWGROUP_ROWS:
-                _flush()
-        if writer is None:
-            return  # empty partition: no file, no stats row
-        _flush()
-        writer.close()
-        # atomic publish of the completed file (rename on local/HDFS);
-        # the deterministic final name makes task retries last-wins
-        fsys.move(tmp, final)
-        size = fsys.get_file_info(final).size
-        record = {
-            "path": final,
-            "min_key": key_lo,
-            "max_key": key_hi,
-            "rows": rows,
-            "null_keys": null_keys,
-            "bytes": int(size),
-            "stats": {
-                c: {
-                    # the <=64-char string rule (see caller docstring):
-                    # a long extreme records None, never a truncation
-                    "min": None
-                    if isinstance(mins.get(c), str) and len(mins[c]) > 64
-                    else mins.get(c),
-                    "max": None
-                    if isinstance(maxs.get(c), str) and len(maxs[c]) > 64
-                    else maxs.get(c),
-                    "nulls": int(nulls[c]),
-                }
-                for c in skip_cols
-            },
-        }
-        yield _pa.RecordBatch.from_arrays(
-            [_pa.array([_json.dumps(record)])], names=["stats"]
-        )
+            out.write(pa.Table.from_batches([batch]))
+        return [out.close()]
 
-    out = clustered.mapInArrow(_write_one_partition, "stats string").collect()
-    import json
-
-    return [json.loads(r["stats"]) for r in out]
+    return _run_writer(clustered, _write_one_partition)
 
 
 def _fused_write_commit_partitions(
@@ -474,158 +533,153 @@ def _fused_write_commit_partitions(
     skip_cols: "list[str]",
     data_cols: "list[str]",
     cdc_cols: "list[str]",
-) -> "tuple[list[dict], list[str]]":
-    """The single job behind a change-feed commit's writes: each range
-    partition's task streams its Arrow batches ONCE, splitting every
-    batch on the ``__ct`` tag — rows with a NULL tag are table data
-    (written key-range-clustered into ``commit_dir`` with the same
-    stats fold as :func:`_fused_write_partitions`), rows with a tag are
-    this commit's change images (written into ``cdc_dir`` with ``__ct``
-    restored to CDF's ``_change_type`` name). One row never crosses the
-    scratch filesystem twice and the commit pays ONE write job instead
-    of the former concurrent pair (max(cdc, data) wall-clock plus two
-    scans of the ranked checkpoint). Returns ``(data stat records,
-    cdc part-file paths)``; task-retry safety is the same
-    deterministic-name + attempt-unique-temp + atomic-move protocol as
-    the data-only writer."""
+) -> "list[dict]":
+    """The single job behind a predicate rewrite's change-feed commit:
+    each range partition's task streams its Arrow batches ONCE,
+    splitting every batch on the ``__ct`` tag — rows with a NULL tag are
+    table data (written with the stats fold), rows with a tag are this
+    commit's change images (written into ``cdc_dir`` with ``__ct``
+    restored to CDF's ``_change_type`` name)."""
     # cdc columns as they sit in the fused frame: the CDF tag column
     # rides as __ct (a table column legitimately named _change_type
-    # would collide inside the union otherwise is not supported today
-    # either — _write_cdc appends the same name)
+    # would collide inside the union otherwise)
     cdc_in_cols = [c if c != "_change_type" else "__ct" for c in cdc_cols]
 
     def _write_one_partition(batches):
-        import json as _json
-        import uuid as _uuid
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-        import pyarrow as _pa
-        import pyarrow.compute as _pc
-        import pyarrow.parquet as _pq
-        from pyarrow import fs as _pafs
-        from pyspark import TaskContext
+        data = _PartFile(commit_dir, "add", key, skip_cols)
+        cdc = _PartFile(cdc_dir, "cdc")
+        for batch in batches:
+            tbl = pa.Table.from_batches([batch])
+            is_cdc = pc.is_valid(tbl.column("__ct"))
+            data.write(tbl.filter(pc.invert(is_cdc)).select(data_cols))
+            cdc.write(
+                tbl.filter(is_cdc).select(cdc_in_cols).rename_columns(cdc_cols)
+            )
+        return [data.close(), cdc.close()]
 
-        dwriter = cwriter = None
-        dtmp = dfinal = ctmp = cfinal = None
-        dfs = cfs = None
-        buf: list = []
-        buffered = 0
-        rows = 0
-        null_keys = 0
-        mins: dict = {}
-        maxs: dict = {}
-        nulls: dict = {c: 0 for c in skip_cols}
-        key_lo = key_hi = None
+    return _run_writer(clustered, _write_one_partition)
 
-        def _fold(tbl: "_pa.Table") -> None:
-            nonlocal rows, null_keys, key_lo, key_hi
-            rows += tbl.num_rows
-            kc = tbl.column(key)
-            null_keys += kc.null_count
-            if kc.null_count < len(kc):
-                mm = _pc.min_max(kc)
-                lo, hi = mm["min"].as_py(), mm["max"].as_py()
-                key_lo = lo if key_lo is None else min(key_lo, lo)
-                key_hi = hi if key_hi is None else max(key_hi, hi)
-            for c in skip_cols:
-                col = tbl.column(c)
-                nulls[c] += col.null_count
-                if col.null_count < len(col):
-                    mm = _pc.min_max(col)
-                    lo, hi = mm["min"].as_py(), mm["max"].as_py()
-                    mins[c] = lo if c not in mins else min(mins[c], lo)
-                    maxs[c] = hi if c not in maxs else max(maxs[c], hi)
 
-        def _flush() -> None:
-            nonlocal buf, buffered
-            if not buf:
+def _merge_write_partitions(
+    clustered: DataFrame,
+    commit_dir: str,
+    cdc_dir: "str | None",
+    key: str,
+    tomb: "str | None",
+    skip_cols: "list[str]",
+    data_cols: "list[str]",
+    cdc_cols: "list[str]",
+) -> "list[dict]":
+    """The single job behind a MERGE commit. ``clustered`` is the
+    touched files' rows (``__src`` 0) unioned with the change set
+    (``__src`` 1), key-range partitioned — every row of a key lands in
+    one partition — and sorted within partitions on (key NULLS FIRST,
+    order_col DESC, ``__src`` DESC), so each key group arrives
+    contiguous with its winner first (a change beats a stored row on an
+    ``order_col`` tie). Each task resolves its groups over the sorted
+    Arrow stream with numpy:
+
+    * a group with no change row passes through verbatim (untouched
+      keys of rewritten files, blind-append duplicates included);
+    * a contested group keeps its first row unless that row is a
+      tombstone (``tomb`` true);
+    * with ``cdc_dir`` set, a contested group whose table state moves —
+      the change side won, or stored duplicates collapse (``oldn`` > 1)
+      — emits Delta-CDF images: the surviving winner as ``insert``
+      (no stored row) or ``update_postimage``, and every stored row as
+      ``update_preimage``, or ``delete`` when the winner is a
+      tombstone. A stored winner over a lone stored row emits nothing.
+
+    NULL keys form one group. The rows of the last key of a batch are
+    held back until the next batch (or the end of the partition), since
+    a group can straddle Arrow batches. ``cdc_cols`` lists the image
+    columns; a ``tomb`` column among them (a stored column of that name)
+    reads NULL on post images, as the data files drop it."""
+
+    def _merge_one_partition(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        data = _PartFile(commit_dir, "add", key, skip_cols)
+        cdc = _PartFile(cdc_dir, "cdc") if cdc_dir is not None else None
+
+        def starts_of(t) -> "np.ndarray":
+            # True where a new key group starts; NULL (and NaN) keys
+            # compare equal to each other, as in Spark's grouping
+            kc = t.column(key).combine_chunks()
+            st = np.ones(len(kc), dtype=bool)
+            if len(kc) > 1:
+                a, b = kc.slice(1), kc.slice(0, len(kc) - 1)
+                ne = pc.fill_null(pc.not_equal(a, b), True)
+                same = pc.and_(a.is_null(), b.is_null())
+                if pa.types.is_floating(kc.type):
+                    nan = pc.fill_null(pc.is_nan(kc), False)
+                    same = pc.or_(
+                        same, pc.and_(nan.slice(1), nan.slice(0, len(kc) - 1))
+                    )
+                st[1:] = pc.and_not(ne, same).to_numpy(zero_copy_only=False)
+            return st
+
+        def resolve(t, st) -> None:
+            m = t.num_rows
+            gs = np.flatnonzero(st)
+            size = np.diff(np.append(gs, m))
+            gid = np.repeat(np.arange(len(gs)), size)
+            src = t.column("__src").to_numpy()
+            chg = np.add.reduceat(src, gs)  # change rows per group
+            oldn = size - chg  # stored rows per group
+            dead = (
+                pc.fill_null(t.column(tomb), False).to_numpy()
+                if tomb is not None
+                else np.zeros(m, dtype=bool)
+            )
+            contested = (chg > 0)[gid]
+            keep = ~contested | (st & ~dead)
+            data.write(t.filter(pa.array(keep)).select(data_cols))
+            if cdc is None:
                 return
-            tbl = _pa.concat_tables(buf)
-            dwriter.write_table(tbl)
-            _fold(tbl)
-            buf, buffered = [], 0
+            moved = ((chg > 0) & ((src[gs] == 1) | (oldn > 1)))[gid]
+            post = np.flatnonzero(st & moved & ~dead)
+            pre = np.flatnonzero((src == 0) & moved)
+            if not len(post) + len(pre):
+                return
+            kinds = np.concatenate([
+                np.where(oldn[gid[post]] == 0, "insert", "update_postimage"),
+                np.where(dead[gs][gid[pre]], "delete", "update_preimage"),
+            ])
+            out = t.take(pa.array(np.concatenate([post, pre]))).select(cdc_cols)
+            if tomb in cdc_cols:
+                i = cdc_cols.index(tomb)
+                is_post = pa.array(np.arange(len(kinds)) < len(post))
+                out = out.set_column(i, tomb, pc.if_else(
+                    is_post, pa.scalar(None, out.schema[i].type), out.column(i)
+                ))
+            cdc.write(out.append_column(
+                "_change_type", pa.array(kinds, pa.string())
+            ))
 
+        carry = carry_st = None
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            tbl = _pa.Table.from_batches([batch])
-            is_cdc = _pc.is_valid(tbl.column("__ct"))
-            dpart = tbl.filter(_pc.invert(is_cdc)).select(data_cols)
-            cpart = (
-                tbl.filter(is_cdc)
-                .select(cdc_in_cols)
-                .rename_columns(cdc_cols)
-            )
-            if dpart.num_rows:
-                if dwriter is None:
-                    dfs, droot = _pafs.FileSystem.from_uri(commit_dir)
-                    pid = TaskContext.get().partitionId()
-                    dfinal = f"{droot}/part-{pid:05d}.parquet"
-                    dtmp = f"{dfinal}.{_uuid.uuid4().hex}.tmp"
-                    dwriter = _pq.ParquetWriter(
-                        dtmp, dpart.schema, filesystem=dfs
-                    )
-                buf.append(dpart)
-                buffered += dpart.num_rows
-                if buffered >= _FUSED_ROWGROUP_ROWS:
-                    _flush()
-            if cpart.num_rows:
-                if cwriter is None:
-                    cfs, croot = _pafs.FileSystem.from_uri(cdc_dir)
-                    pid = TaskContext.get().partitionId()
-                    cfinal = f"{croot}/part-{pid:05d}.parquet"
-                    ctmp = f"{cfinal}.{_uuid.uuid4().hex}.tmp"
-                    cwriter = _pq.ParquetWriter(
-                        ctmp, cpart.schema, filesystem=cfs
-                    )
-                cwriter.write_table(cpart)
-        out = []
-        if dwriter is not None:
-            _flush()
-            dwriter.close()
-            dfs.move(dtmp, dfinal)
-            size = dfs.get_file_info(dfinal).size
-            out.append(
-                {
-                    "kind": "add",
-                    "path": dfinal,
-                    "min_key": key_lo,
-                    "max_key": key_hi,
-                    "rows": rows,
-                    "null_keys": null_keys,
-                    "bytes": int(size),
-                    "stats": {
-                        c: {
-                            # <=64-char string rule: a long extreme
-                            # records None, never a truncation (see
-                            # _write_data_files)
-                            "min": None
-                            if isinstance(mins.get(c), str)
-                            and len(mins[c]) > 64
-                            else mins.get(c),
-                            "max": None
-                            if isinstance(maxs.get(c), str)
-                            and len(maxs[c]) > 64
-                            else maxs.get(c),
-                            "nulls": int(nulls[c]),
-                        }
-                        for c in skip_cols
-                    },
-                }
-            )
-        if cwriter is not None:
-            cwriter.close()
-            cfs.move(ctmp, cfinal)
-            out.append({"kind": "cdc", "path": cfinal})
-        if not out:
-            return  # empty partition: no files, no records
-        yield _pa.RecordBatch.from_arrays(
-            [_pa.array([_json.dumps(r) for r in out])], names=["stats"]
-        )
+            t = pa.Table.from_batches([batch])
+            if carry is not None:
+                t = pa.concat_tables([carry, t])
+            t = t.combine_chunks()
+            st = starts_of(t)
+            last = int(np.flatnonzero(st)[-1])
+            if last:
+                resolve(t.slice(0, last), st[:last])
+            carry, carry_st = t.slice(last), st[last:]
+        if carry is not None:
+            resolve(carry, carry_st)
+        return [data.close(), cdc.close() if cdc is not None else None]
 
-    out = clustered.mapInArrow(_write_one_partition, "stats string").collect()
-    import json
-
-    return [json.loads(r["stats"]) for r in out]
+    return _run_writer(clustered, _merge_one_partition)
 
 
 class TxnLogTable:
@@ -653,8 +707,8 @@ class TxnLogTable:
         self.files_per_commit = files_per_commit
         self.checkpoint_interval = checkpoint_interval
         # change_feed=True makes every MERGE also write row-level change
-        # files (pre/post images tagged _change_type) computed from the
-        # join the merge already performs; read_changes/read_deltas then
+        # files (pre/post images tagged _change_type) classified by the
+        # merge's own write pass; read_changes/read_deltas then
         # replay O(changed rows) for that commit instead of re-emitting
         # every row of the rewritten files. Reading is data-driven (a
         # commit with cdc actions uses them regardless of this flag), so
@@ -747,10 +801,20 @@ class TxnLogTable:
         fs, jpath = self._fs(self.log_dir)
         if not fs.exists(jpath):
             return [], []
+        # the entry paths come back as ONE string built JVM-side
+        # ("{p1,p2,...}"): iterating the FileStatus array from Python
+        # costs two py4j round trips per entry, so every fold would grow
+        # with the table's age. Log names start with a digit; temp files
+        # (".tmp-*") and the fragments a comma inside the directory path
+        # splits off do not.
+        jvm = self.spark._jvm
+        joined = jvm.org.apache.commons.lang3.ArrayUtils.toString(
+            jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(fs.listStatus(jpath))
+        )
         commits, ckpts = [], []
-        for st in fs.listStatus(jpath):
-            name = st.getPath().getName()
-            if name.startswith((".", "_")):
+        for p in joined[1:-1].split(","):
+            name = p.rsplit("/", 1)[-1]
+            if not name[:1].isdigit():
                 continue
             if name.endswith(".checkpoint.json"):
                 ckpts.append(int(name[: -len(".checkpoint.json")]))
@@ -782,9 +846,13 @@ class TxnLogTable:
         except Exception:
             return None
 
-    def _base_checkpoint(self, version: int) -> "tuple[int, dict] | None":
-        """Newest readable checkpoint at or before ``version``."""
-        _, ckpts = self._log_listing()
+    def _base_checkpoint(
+        self, version: int, ckpts: "list[int] | None" = None
+    ) -> "tuple[int, dict] | None":
+        """Newest readable checkpoint at or before ``version``;
+        ``ckpts`` is the checkpoint list of a listing already in hand."""
+        if ckpts is None:
+            _, ckpts = self._log_listing()
         for cv in reversed(ckpts):
             if cv <= version:
                 body = self._read_checkpoint(cv)
@@ -801,8 +869,9 @@ class TxnLogTable:
         never replays the same tail twice. The log is dense (see
         ``_write_text_atomic``), so a checkpoint at ``c`` covers exactly
         the commits ``0..c`` and the tail replay ``c+1..version`` misses
-        nothing."""
-        versions = self._list_versions()
+        nothing. One log listing serves both the commit tail and the
+        checkpoint lookup."""
+        versions, ckpts = self._log_listing()
         if version is None:
             version = versions[-1] if versions else -1
         live: dict[str, dict] = {}
@@ -811,7 +880,7 @@ class TxnLogTable:
         constraints: dict[str, str] = {}
         properties: dict[str, str] = {}
         start = 0
-        ckpt = self._base_checkpoint(version)
+        ckpt = self._base_checkpoint(version, ckpts)
         if ckpt is not None:
             start = ckpt[0] + 1
             live = {a["path"]: a for a in ckpt[1]["adds"]}
@@ -1011,7 +1080,7 @@ class TxnLogTable:
         return bounds
 
     def _cluster_by_key(
-        self, df: DataFrame, n_files: int, cluster, boundaries
+        self, df: DataFrame, n_files: int, cluster, boundaries, order=None
     ) -> DataFrame:
         """Key-range clustering for a commit write. With driver-derived
         ``boundaries`` (see ``_stats_boundaries_for``) the partition id
@@ -1023,11 +1092,14 @@ class TxnLogTable:
         monotone in the key either way, so the written files are
         key-range DISJOINT exactly as before — stats-pruning correctness
         never depends on how well the boundaries balance file sizes.
-        Without boundaries: the classic sampled range partitioning."""
+        Without boundaries: the classic sampled range partitioning.
+        Either way every row of one key lands in one partition, sorted
+        on ``order`` (default: the cluster expression)."""
+        order = order or [cluster]
         if boundaries is None:
             return df.repartitionByRange(
                 n_files, cluster
-            ).sortWithinPartitions(cluster)
+            ).sortWithinPartitions(*order)
         n = len(boundaries) + 1
         pid = None
         for b in boundaries:
@@ -1038,7 +1110,7 @@ class TxnLogTable:
             F.array(*[F.lit(x) for x in _partition_preimages(n)]),
             pid + 1,
         )
-        return df.repartition(n, route).sortWithinPartitions(cluster)
+        return df.repartition(n, route).sortWithinPartitions(*order)
 
     def _write_data_files(
         self, df: DataFrame, cluster_expr=None, n_files: "int | None" = None,
@@ -1078,7 +1150,6 @@ class TxnLogTable:
         min/max stats stay tight. ``n_files`` overrides the table's
         ``files_per_commit`` (used by size-targeted compaction to emit
         ~target-size outputs)."""
-        commit_dir = f"{self.path}/files/c-{uuid.uuid4().hex}"
         cluster = cluster_expr if cluster_expr is not None else F.col(self.key)
         boundaries = (
             self._stats_boundaries_for(
@@ -1096,38 +1167,63 @@ class TxnLogTable:
         clustered = clustered.drop(
             *[c for c in clustered.columns if c.startswith("__zorder_")]
         )
-        # per-column data-skipping stats (Delta's dataSkipping rule):
-        # min/max/null-count for the first STATS_COLUMNS leaf columns of
-        # integral/floating/string type. Strings are recorded only when
-        # both extremes are short (<= 64 chars) — a truncated max
-        # understates the file's upper bound and would prune files that
-        # DO match, so long-string columns record None (= never pruned
-        # on) instead of lying. JSON-storable by construction.
-        skip_cols = [
+        commit_dir = self._new_dir("files")
+        records = _fused_write_partitions(
+            clustered, commit_dir, self.key, self._skip_cols(clustered.schema)
+        )
+        return sorted(map(_add_action, records), key=lambda a: a["path"])
+
+    def _skip_cols(self, schema: StructType) -> "list[str]":
+        """Per-column data-skipping stats (Delta's dataSkipping rule):
+        min/max/null-count for the first STATS_COLUMNS leaf columns of
+        integral/floating/string type. Strings are recorded only when
+        both extremes are short (<= 64 chars) — a truncated max
+        understates the file's upper bound and would prune files that
+        DO match, so long-string columns record None (= never pruned
+        on) instead of lying. JSON-storable by construction."""
+        return [
             fld.name
-            for fld in clustered.schema.fields[: self.STATS_COLUMNS]
+            for fld in schema.fields[: self.STATS_COLUMNS]
             if fld.dataType.simpleString().split("(")[0]
             in ("tinyint", "smallint", "int", "bigint", "float", "double",
                 "string")
         ]
-        fs, jdir = self._fs(commit_dir)
+
+    def _new_dir(self, kind: str) -> str:
+        """A fresh, unreferenced commit directory under ``kind``
+        (``files`` or ``changes``)."""
+        d = f"{self.path}/{kind}/c-{uuid.uuid4().hex}"
+        fs, jdir = self._fs(d)
         fs.mkdirs(jdir)
-        key = self.key
-        records = _fused_write_partitions(
-            clustered, commit_dir, key, skip_cols
+        return d
+
+    def _cdc_paths(
+        self, records: "list[dict]", cdc_dir: str, schema: StructType
+    ) -> "list[str]":
+        """The change-file paths among a commit write's records. A
+        change-feed commit ALWAYS records change files, even when it
+        produced zero change rows (every change row lost to a stored
+        winner): downstream cursors read "cdc actions present, zero
+        rows" as a replayable empty span, while a commit with NO cdc
+        actions is indistinguishable from a legacy pre-change-feed
+        merge — the typed feed's fidelity guard refuses those. So an
+        empty ``schema``-shaped file is written driver-side then (no
+        job; the rare shape never occurs on row-moving commits)."""
+        paths = sorted(
+            _canon_uri(r["path"]) for r in records if r["kind"] == "cdc"
         )
-        return [
-            {
-                "path": _canon_uri(r["path"]),
-                "min_key": r["min_key"],
-                "max_key": r["max_key"],
-                "rows": r["rows"],
-                "null_keys": r["null_keys"],
-                "bytes": r["bytes"],
-                "stats": r["stats"],
-            }
-            for r in sorted(records, key=lambda r: r["path"])
-        ]
+        if paths:
+            return paths
+        import pyarrow.parquet as _pq
+        from pyarrow import fs as _pafs
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        fsys, root = _pafs.FileSystem.from_uri(cdc_dir)
+        p = f"{root}/part-00000.parquet"
+        _pq.write_table(
+            to_arrow_schema(schema).empty_table(), p, filesystem=fsys
+        )
+        return [_canon_uri(p)]
 
     def _widened_schema_json(
         self, prev_json: "str | None", df_schema: StructType
@@ -1503,7 +1599,9 @@ class TxnLogTable:
                 f"CHECK constraint(s) violated by {what}: {detail}"
             )
 
-    def _maybe_auto_optimize(self) -> None:
+    def _maybe_auto_optimize(
+        self, state: "dict | None", actions: "list[dict]"
+    ) -> None:
         """Best-effort inline compaction after a write: fires only when
         the ``auto_optimize.file_threshold`` property is set and the
         live file count exceeds it — and always through the SIZE-TARGETED
@@ -1513,12 +1611,25 @@ class TxnLogTable:
         MiB) sets the bin target; files at or above half the target are
         never rewritten inline. Never raises — a lost race or a
         malformed threshold leaves compaction to the next write (the
-        data is already safely committed)."""
+        data is already safely committed).
+
+        ``state`` is the fold the caller's commit won its CAS on (None
+        for a table with no commits) and ``actions`` that commit's
+        actions: the log is dense, so base fold + actions IS the
+        committed state, and the common unset-threshold case costs no
+        log read at all."""
         try:
-            state = self._fold_log()
-            props = state["properties"]
+            props = state["properties"] if state is not None else {}
             thr = props.get("auto_optimize.file_threshold")
-            if not thr or len(state["adds"]) <= int(thr):
+            if not thr:
+                return
+            live = dict(state["adds"])
+            for a in actions:
+                if "add" in a:
+                    live[a["add"]["path"]] = a["add"]
+                elif "remove" in a:
+                    live.pop(a["remove"]["path"], None)
+            if len(live) <= int(thr):
                 return
             tgt = int(
                 props.get("auto_optimize.target_file_bytes")
@@ -1530,9 +1641,7 @@ class TxnLogTable:
             # full-size files, by design) — skip the no-op optimize() so
             # every subsequent write pays ONE log fold, not two
             small = [
-                a
-                for a in state["adds"].values()
-                if int(a.get("bytes") or 0) < tgt // 2
+                a for a in live.values() if int(a.get("bytes") or 0) < tgt // 2
             ]
             if len(small) < 2:
                 return
@@ -1606,7 +1715,7 @@ class TxnLogTable:
             # column must not drop that column from the recorded schema
             schema = self._widened_schema_json(prev, df.schema)
             if self._try_commit(base + 1, "append", actions, txn, schema):
-                self._maybe_auto_optimize()
+                self._maybe_auto_optimize(state, actions)
                 return base + 1
             if txn is not None and self.txn_seen(txn["app_id"], txn["batch_id"]):
                 return self.latest_version()
@@ -1627,15 +1736,32 @@ class TxnLogTable:
         existing rows on ties; two CHANGE rows tying on both key and
         ``order_col`` are an input-contract violation — the winner among
         them is arbitrary, same caveat as any CDC apply, so feed batches
-        with a strictly ordered ``order_col`` per key). Only files whose
-        [min,max] key range overlaps the incoming keys are rewritten
-        (stats pruning). Losing the publish race re-runs conflict
-        detection against the PUBLISHED winner — the log has no
-        claimed-but-unpublished state, so the check can never pass
-        spuriously while a slow competitor is still in flight: if the
-        winner removed a file this merge read, ``ConcurrentModification``
-        is raised; otherwise the whole merge re-runs on the new
-        snapshot."""
+        with a strictly ordered ``order_col`` per key). A winning row
+        whose ``delete_col`` is true deletes the key; ``delete_col`` is
+        control metadata and never lands in the data files. NULL keys
+        are one key. Keys the change set does not name keep every stored
+        row verbatim (blind-append duplicates included).
+
+        Only files whose [min,max] key range overlaps the incoming keys
+        are rewritten (stats pruning), and the rewrite is ONE Spark job
+        (:meth:`_write_merge_files`): the touched files' rows and the
+        change set go through one key-range exchange, sorted so each
+        key's rows arrive together winner-first, and one ``mapInArrow``
+        kernel per range partition picks the winners, classifies the
+        change images and writes the data file and (``change_feed``)
+        the change file. A change-feed merge over numeric keys runs at
+        most five jobs in all: the change-set checkpoint (skipped with
+        ``changes_stable``), the bounds aggregate, and the write's
+        shuffle-map and result jobs — plus a CHECK-constraint aggregate
+        when constraints exist, and a range-sampling job for keys whose
+        boundaries cannot be modeled from stats.
+
+        Losing the publish race re-runs conflict detection against the
+        PUBLISHED winner — the log has no claimed-but-unpublished state,
+        so the check can never pass spuriously while a slow competitor
+        is still in flight: if the winner removed a file this merge
+        read, ``ConcurrentModification`` is raised; otherwise the whole
+        merge re-runs on the new snapshot."""
         if txn is not None and self.txn_seen(txn["app_id"], txn["batch_id"]):
             return self.latest_version()
         base0 = self.latest_version()
@@ -1773,6 +1899,10 @@ class TxnLogTable:
                 )
                 for a in touched
             ] + [(bounds["lo"], bounds["hi"], int(bounds["n_changes"]))]
+            stacked = changes.withColumn("__src", F.lit(1))
+            # a stored column named like the tombstone stays in the
+            # pre-images, as it was stored
+            stored_tomb = False
             if touched:
                 # read touched files under the RECORDED schema, not footer
                 # inference: after schema evolution the touched set can mix
@@ -1786,76 +1916,28 @@ class TxnLogTable:
                     else self.spark.read
                 )
                 old = reader.parquet(*[a["path"] for a in touched])
-                # keep rows of untouched keys verbatim; merge the rest.
-                # eqNullSafe: plain equality never matches NULL = NULL, so
-                # a NULL-key upsert would both keep the old row (anti-join
-                # passes it) AND write the new one — a duplicate per merge
-                keys = changes.select(F.col(self.key).alias("__mk")).distinct()
-                match = F.col(self.key).eqNullSafe(F.col("__mk"))
-                untouched_rows = old.join(keys, match, "left_anti")
-                contested_src = old.join(keys, match, "left_semi")
-            else:
-                untouched_rows = None
-                contested_src = None
-            ranked = changes.withColumn("__src", F.lit(1))
-            tomb_added = False
-            if contested_src is not None:
-                base_side = contested_src
-                if delete_col is not None and delete_col not in base_side.columns:
-                    # stored rows carry no tombstone column: align schemas
-                    base_side = base_side.withColumn(delete_col, F.lit(False))
-                    tomb_added = True
+                stored_tomb = delete_col in old.columns
                 # allowMissingColumns = schema evolution: a change set
                 # with NEW columns widens the table (old rows read NULL);
                 # a change row MISSING a column upserts NULL there — the
                 # row image IS the change (CDC post-image semantics)
-                ranked = base_side.withColumn("__src", F.lit(0)).unionByName(
-                    ranked, allowMissingColumns=True
+                stacked = old.withColumn("__src", F.lit(0)).unionByName(
+                    stacked, allowMissingColumns=True
                 )
-            w = Window.partitionBy(self.key).orderBy(
-                F.desc(self.order_col), F.desc("__src")
+            data_schema = StructType(
+                [
+                    f
+                    for f in stacked.schema.fields
+                    if f.name not in ("__src", delete_col)
+                ]
             )
-            # ONE eager checkpoint of the ranked contested∪changes frame
-            # replaces the former two (contested, then winners on top of
-            # it — two sequential materialization jobs per commit): every
-            # consumer — the winner rows feeding the data write, the
-            # contested pre-images and old-count info feeding the change
-            # files, and both passes of the data write's range exchange —
-            # is now a FILTER over this one materialization, so the
-            # touched-file scan, the broadcast semi-join and the rank
-            # window each run exactly once per commit (guide §2.4).
-            # Untouched keys' rows never enter the window (the broadcast
-            # anti-join keeps them on the scan side), so the rank shuffle
-            # stays O(changed rows) at scale exactly as before. The
-            # checkpoint also pins the row_number assignment, so winner
-            # choice among exact (key, order_col, __src) ties is decided
-            # once and every consumer sees the same decision.
-            ranked = ranked.withColumn(
-                "__rn", F.row_number().over(w)
-            ).localCheckpoint(eager=True)
-            winners = ranked.filter(F.col("__rn") == 1).drop("__rn")
-            merged = winners.drop("__src")
-            if delete_col is not None:
-                merged = merged.filter(~F.coalesce(F.col(delete_col), F.lit(False)))
-                merged = merged.drop(delete_col)
-                if untouched_rows is not None and delete_col in untouched_rows.columns:
-                    untouched_rows = untouched_rows.drop(delete_col)
-            if untouched_rows is not None:
-                merged = merged.unionByName(untouched_rows, allowMissingColumns=True)
-            if self.change_feed:
-                cdc_files, adds = self._write_fused_commit_files(
-                    merged,
-                    self._change_frames(
-                        ranked, delete_col, tomb_added,
-                        contested_src is not None,
-                    ),
-                    range_sources=range_sources,
-                )
-            else:
-                cdc_files = []
-                adds = self._write_data_files(
-                    merged, range_sources=range_sources
-                )
+            adds, cdc_files = self._write_merge_files(
+                stacked,
+                data_schema,
+                delete_col if delete_col in stacked.columns else None,
+                stored_tomb,
+                range_sources,
+            )
             actions = (
                 [{"add": a} for a in adds]
                 + [{"remove": {"path": a["path"]}} for a in touched]
@@ -1869,9 +1951,9 @@ class TxnLogTable:
                 # widen, never narrow: a merge whose touched set missed the
                 # wide files (or touched nothing) must not drop evolved
                 # columns from the recorded schema
-                self._widened_schema_json(state["schema"], merged.schema),
+                self._widened_schema_json(state["schema"], data_schema),
             ):
-                self._maybe_auto_optimize()
+                self._maybe_auto_optimize(state, actions)
                 return base_version + 1
             # lost the publish race: the winner IS published (dense log),
             # so this check is against real state, never an in-flight claim
@@ -2151,200 +2233,110 @@ class TxnLogTable:
             f"{op} lost the commit race {max_retries} times"
         )
 
-    def _change_frames(
+    def _write_merge_files(
         self,
-        ranked: DataFrame,
-        delete_col: "str | None",
-        tomb_added: bool,
-        has_contested: bool,
-    ) -> "list[DataFrame]":
-        """Materialize this merge's ROW-LEVEL change images (Delta CDF's
-        ``_change_type`` convention: insert / update_preimage /
-        update_postimage / delete) from the checkpointed ranked
-        contested∪changes frame. Only keys whose table state actually
-        moves appear: keys the change set won, plus keys whose stored
-        duplicates collapse (a blind-append table can hold several rows
-        per key; the merge keeps one winner, so ALL stored rows are the
-        pre-image even when the winner is stored). A key whose single
-        stored row out-ordered the change contributes nothing, and the
-        untouched rows of rewritten files never enter the frame — so
-        the files are O(changed rows), the
-        property that lets a merge touching 1% of a file's rows move 1%
-        of the rows through a downstream incremental refresh.
-
-        Shape: ONE ``Window.partitionBy(key)`` over the ranked
-        checkpoint computes everything the classification needs as
-        per-group flags — ``__oldn`` (stored-row count: a key moves
-        materially when the change set won it OR its duplicates
-        collapse), the winner's source side and tombstone — and the
-        four image types are plain filters over that. The former shape
-        derived the same answers through a groupBy + three joins
-        (old-count left join for the post images, two semi-joins keying
-        the pre-images/deletes), whose initial plan carried the
-        aggregate three times and planned one semi-join as a
-        SortMergeJoin with two extra O(changed rows) exchanges because
-        the checkpointed build side has no size statistics; the window
-        form needs exactly one exchange, reused across the union's
-        branches. Row multiset proven identical against the old shape
-        on the sf0.1 feed commit before the swap. Returns the
-        ``_change_type``-tagged frames; the fused commit writer
-        (``_write_fused_commit_files``) rides them through the data
-        write's range exchange and materializes them alongside the
-        data files in one job."""
-        k = self.key
-        tomb = (
-            F.coalesce(F.col(delete_col), F.lit(False))
-            if delete_col is not None
-            else F.lit(False)
+        stacked: DataFrame,
+        data_schema: StructType,
+        tomb: "str | None",
+        stored_tomb: bool,
+        range_sources,
+    ) -> "tuple[list[dict], list[str]]":
+        """Write a MERGE commit's data files (and, with ``change_feed``,
+        its row-level change files) in ONE job: ``stacked`` (stored rows
+        ``__src`` 0 ∪ change rows ``__src`` 1) goes through the commit's
+        key-range exchange — stats-derived boundaries when
+        ``range_sources`` model the key, else the sampled
+        ``repartitionByRange``; either way every row of a key lands in
+        one partition — and :func:`_merge_write_partitions` resolves
+        each key group in its task. ``tomb`` is the tombstone column
+        (None: nothing deletes); ``stored_tomb`` keeps a stored column
+        of that name in the pre-images. Returns ``(add actions, cdc
+        paths)``."""
+        key = self.key
+        boundaries = self._stats_boundaries_for(
+            stacked, self.files_per_commit, range_sources
         )
-        win = Window.partitionBy(k)
-        def _winner(attr):
-            # exactly one __rn==1 row per group: max() over the
-            # when-guarded expression (NULL for non-winners — when
-            # without otherwise) reads the winner's attribute from
-            # every row of its group, with no dependence on arithmetic
-            # NULL propagation (r16 ADVICE: the former one_win * attr
-            # form silently misclassifies if attr ever becomes nullable)
-            return F.max(F.when(F.col("__rn") == 1, attr)).over(win)
-
-        aug = (
-            ranked.withColumn(
-                "__oldn",
-                F.sum(
-                    F.when(F.col("__src") == 0, F.lit(1)).otherwise(F.lit(0))
-                ).over(win),
-            )
-            .withColumn("__wsrc", _winner(F.col("__src")))
-            .withColumn("__wgone", _winner(tomb.cast("int")))
+        clustered = self._cluster_by_key(
+            stacked,
+            self.files_per_commit,
+            F.col(key),
+            boundaries,
+            order=[
+                F.col(key).asc_nulls_first(),
+                F.col(self.order_col).desc_nulls_last(),
+                F.col("__src").desc(),
+            ],
         )
-        material = (F.col("__wsrc") == 1) | (F.col("__oldn") > 1)
-        meta_cols = ["__rn", "__src", "__oldn", "__wsrc", "__wgone"]
-        # post images carry the winner row WITHOUT the tombstone column
-        # (it is consumed into the delete classification); pre-images
-        # must carry exactly the stored rows' columns, so they strip it
-        # only when the schema alignment added it (a genuinely stored
-        # column of that name stays, as it always did)
-        post_drop = meta_cols + ([delete_col] if delete_col is not None else [])
-        post = aug.filter(
-            (F.col("__rn") == 1) & material & (F.col("__wgone") == 0)
+        cdc_fields = list(data_schema.fields) + (
+            [stacked.schema[tomb]] if stored_tomb else []
         )
-        parts = [
-            post.filter(F.col("__oldn") == 0)
-            .drop(*post_drop)
-            .withColumn("_change_type", F.lit("insert")),
-            post.filter(F.col("__oldn") > 0)
-            .drop(*post_drop)
-            .withColumn("_change_type", F.lit("update_postimage")),
-        ]
-        if has_contested:
-            pre_drop = meta_cols + ([delete_col] if tomb_added else [])
-            # any stored (__src==0) row implies __oldn >= 1, so the old
-            # shape's `__oldn > 0` key conditions are implied here
-            stored = aug.filter((F.col("__src") == 0) & material)
-            parts.append(
-                stored.filter(F.col("__wgone") == 0)
-                .drop(*pre_drop)
-                .withColumn("_change_type", F.lit("update_preimage"))
-            )
-            parts.append(
-                stored.filter(F.col("__wgone") == 1)
-                .drop(*pre_drop)
-                .withColumn("_change_type", F.lit("delete"))
-            )
-        return parts
+        cdc_dir = self._new_dir("changes") if self.change_feed else None
+        records = _merge_write_partitions(
+            clustered,
+            self._new_dir("files"),
+            cdc_dir,
+            key,
+            tomb,
+            self._skip_cols(data_schema),
+            data_schema.names,
+            [f.name for f in cdc_fields],
+        )
+        adds = sorted(
+            (_add_action(r) for r in records if r["kind"] == "add"),
+            key=lambda a: a["path"],
+        )
+        if cdc_dir is None:
+            return adds, []
+        cdc_schema = StructType(
+            cdc_fields + [StructField("_change_type", StringType())]
+        )
+        return adds, self._cdc_paths(records, cdc_dir, cdc_schema)
 
     def _write_fused_commit_files(
         self, data_df: DataFrame, cdc_frames: "list[DataFrame]",
         range_sources=None,
     ) -> "tuple[list[str], list[dict]]":
-        """Write a change-feed commit's data files AND change files in
-        ONE Spark job (guide §2.4 — the r16 deferral #1): the cdc union
-        rides the data frame through the SAME key-range exchange, tagged
-        by ``__ct`` (NULL = table data, else the CDF ``_change_type``),
-        and each range partition's task splits its batches into the two
-        parquet writers (:func:`_fused_write_commit_partitions`). The
-        former shape ran the two writes as concurrent jobs — the commit
-        paid max(cdc, data) wall-clock plus a second scan of the ranked
-        checkpoint and a separate coalesce exchange for the cdc rows.
-        Row multisets of both outputs are unchanged: the data rows are
-        exactly ``data_df`` (the __ct filter is a partition-local split,
-        order within a sorted partition preserved), the change rows are
-        exactly the ``_write_cdc`` union. Change files now land
-        key-range-partitioned (<= files_per_commit, one per non-empty
-        partition) instead of coalesced — readers consume change rows as
-        a multiset, so the file-count shape is free to follow the data
-        write's. Returns ``(cdc part paths, add actions)``."""
+        """Write a predicate rewrite's (``delete_where`` /
+        ``update_where``) data files AND change files in ONE Spark job:
+        the cdc union rides the data frame through the SAME key-range
+        exchange, tagged by ``__ct`` (NULL = table data, else the CDF
+        ``_change_type``), and each range partition's task splits its
+        batches into the two parquet writers
+        (:func:`_fused_write_commit_partitions`). The data rows are
+        exactly ``data_df``, the change rows exactly the union of
+        ``cdc_frames``; change files land key-range-partitioned (<=
+        files_per_commit, one per non-empty partition). Returns ``(cdc
+        part paths, add actions)``."""
         cdc = cdc_frames[0]
         for p in cdc_frames[1:]:
             cdc = cdc.unionByName(p, allowMissingColumns=True)
-        data_cols = list(data_df.columns)
-        cdc_cols = list(cdc.columns)
         fused = data_df.unionByName(
             cdc.withColumnRenamed("_change_type", "__ct"),
             allowMissingColumns=True,
         )
-        commit_dir = f"{self.path}/files/c-{uuid.uuid4().hex}"
-        cdc_dir = f"{self.path}/changes/c-{uuid.uuid4().hex}"
         boundaries = self._stats_boundaries_for(
             data_df, self.files_per_commit, range_sources
         )
         clustered = self._cluster_by_key(
             fused, self.files_per_commit, F.col(self.key), boundaries
         )
-        # per-column data-skipping stats over the DATA columns (same
-        # rule as _write_data_files; the fused frame's extra cdc-only
-        # columns sit past the data prefix and never enter the stats)
-        skip_cols = [
-            fld.name
-            for fld in data_df.schema.fields[: self.STATS_COLUMNS]
-            if fld.dataType.simpleString().split("(")[0]
-            in ("tinyint", "smallint", "int", "bigint", "float", "double",
-                "string")
-        ]
-        fs, jdir = self._fs(commit_dir)
-        fs.mkdirs(jdir)
-        cfs, cjdir = self._fs(cdc_dir)
-        cfs.mkdirs(cjdir)
+        cdc_dir = self._new_dir("changes")
         records = _fused_write_commit_partitions(
-            clustered, commit_dir, cdc_dir, self.key, skip_cols,
-            data_cols, cdc_cols,
+            clustered,
+            self._new_dir("files"),
+            cdc_dir,
+            self.key,
+            # stats over the DATA columns only: the fused frame's extra
+            # cdc-only columns sit past the data prefix
+            self._skip_cols(data_df.schema),
+            list(data_df.columns),
+            list(cdc.columns),
         )
-        adds = [
-            {
-                "path": _canon_uri(r["path"]),
-                "min_key": r["min_key"],
-                "max_key": r["max_key"],
-                "rows": r["rows"],
-                "null_keys": r["null_keys"],
-                "bytes": r["bytes"],
-                "stats": r["stats"],
-            }
-            for r in records
-            if r["kind"] == "add"
-        ]
-        cdc_paths = sorted(
-            _canon_uri(r["path"]) for r in records if r["kind"] == "cdc"
+        adds = sorted(
+            (_add_action(r) for r in records if r["kind"] == "add"),
+            key=lambda a: a["path"],
         )
-        if not cdc_paths:
-            # a change-feed commit ALWAYS records change files, even when
-            # this merge produced zero change rows (every change row lost
-            # to a stored winner): downstream cursors read "cdc actions
-            # present, zero rows" as a replayable empty span, while a
-            # commit with NO cdc actions is indistinguishable from a
-            # legacy pre-change-feed merge — the typed feed's fidelity
-            # guard refuses those. One empty file, written driver-side
-            # (no job; the rare shape never occurs on row-moving commits).
-            import pyarrow.parquet as _pq
-            from pyarrow import fs as _pafs
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            fsys, root = _pafs.FileSystem.from_uri(cdc_dir)
-            p = f"{root}/part-00000.parquet"
-            _pq.write_table(
-                to_arrow_schema(cdc.schema).empty_table(), p, filesystem=fsys
-            )
-            cdc_paths = [_canon_uri(p)]
-        return cdc_paths, sorted(adds, key=lambda a: a["path"])
+        return self._cdc_paths(records, cdc_dir, cdc.schema), adds
 
     def _write_cdc(self, frames: "list[DataFrame]") -> "list[str]":
         """Union ``_change_type``-tagged frames and materialize them as

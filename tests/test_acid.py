@@ -2603,13 +2603,15 @@ def test_constraint_added_concurrently_blocks_append_and_merge(spark, tmp_path):
     t2.drop_constraint("x_nonneg")
     fired["n"] = 0
 
-    def inject_alter_merge(df, cluster_expr=None, **kw):
+    real_merge_write = t1._write_merge_files
+
+    def inject_alter_merge(*args, **kw):
         if fired["n"] == 0:
             fired["n"] += 1
             t2.add_constraint("x_pos", "x > 0")
-        return real_write(df, cluster_expr, **kw)
+        return real_merge_write(*args, **kw)
 
-    t1._write_data_files = inject_alter_merge
+    t1._write_merge_files = inject_alter_merge
     head = t1.latest_version()
     with pytest.raises(ConstraintViolation, match="concurrently"):
         t1.merge(
@@ -2619,6 +2621,7 @@ def test_constraint_added_concurrently_blocks_append_and_merge(spark, tmp_path):
         )
     assert {r.k for r in t1.read().collect()} == {1}
     t1._write_data_files = real_write
+    t1._write_merge_files = real_merge_write
     # a compliant batch passes under the now-active constraints
     t1.append(
         spark.createDataFrame(
@@ -3548,3 +3551,197 @@ def test_fused_write_timestamp_date_roundtrip(spark, tmp_path):
     back = spark.read.parquet(adds[0]["path"])
     assert back.dtypes == df.dtypes
     assert back.collect() == df.collect()
+
+
+def _python_merge(stored, changes, cols):
+    """Plain-Python MERGE fold, the oracle for the single-pass kernel:
+    returns (surviving rows, change images). ``stored``/``changes`` are
+    dicts with ``k`` and ``seq`` (changes also ``dead``); a key with no
+    change row keeps every stored row, otherwise the latest ``seq``
+    wins with the change side winning ties, and a winning tombstone
+    deletes the key. Images follow Delta CDF: a key moves when the
+    change side won or its stored duplicates collapse."""
+    groups = {}
+    for src, rows in ((0, stored), (1, changes)):
+        for r in rows:
+            groups.setdefault(r["k"], ([], []))[src].append(r)
+
+    def row(r):
+        return tuple(r.get(c) for c in cols)
+
+    kept, images = [], []
+    for old, chg in groups.values():
+        if not chg:
+            kept.extend(row(r) for r in old)
+            continue
+        win_src, win = max(
+            [(0, r) for r in old] + [(1, r) for r in chg],
+            key=lambda p: (p[1]["seq"], p[0]),
+        )
+        dead = win_src == 1 and bool(win.get("dead"))
+        if not dead:
+            kept.append(row(win))
+        if win_src == 1 or len(old) > 1:
+            if not dead:
+                images.append(
+                    row(win) + ("update_postimage" if old else "insert",)
+                )
+            images.extend(
+                row(r) + ("delete" if dead else "update_preimage",)
+                for r in old
+            )
+    return kept, images
+
+
+@pytest.mark.parametrize("change_feed", [True, False])
+def test_merge_kernel_edge_cases_match_python_fold(spark, tmp_path, change_feed):
+    """The single-pass MERGE kernel resolves key groups over a sorted
+    Arrow stream; with 2-row Arrow batches every group straddles a
+    batch boundary. Blind-append duplicates (collapsing, and passing
+    through untouched), NULL keys on both sides, an exact order_col tie
+    between a stored and a change row (the change wins), a tombstone
+    beating a stored row, a losing stored-side key, and a change set
+    that adds a column — the snapshot, read_changes(v-1) and the
+    on-disk change images all equal the plain-Python fold."""
+    t = _table(spark, tmp_path, files_per_commit=2, change_feed=change_feed)
+    stored = [
+        {"k": 1, "seq": 1, "v": "a"}, {"k": 1, "seq": 2, "v": "a2"},
+        {"k": 2, "seq": 1, "v": "b"}, {"k": None, "seq": 1, "v": "n"},
+        {"k": 3, "seq": 5, "v": "c"}, {"k": 4, "seq": 1, "v": "d"},
+        {"k": 5, "seq": 1, "v": "e"}, {"k": 8, "seq": 1, "v": "h"},
+    ]
+    dups = [{"k": 2, "seq": 3, "v": "b2"}, {"k": 5, "seq": 1, "v": "e"}]
+    schema = "k long, seq long, v string"
+    t.append(spark.createDataFrame([(r["k"], r["seq"], r["v"]) for r in stored], schema))
+    t.append(spark.createDataFrame([(r["k"], r["seq"], r["v"]) for r in dups], schema))
+    changes = [
+        {"k": 1, "seq": 1, "v": "c1", "w": 10, "dead": False},  # dups collapse
+        {"k": 2, "seq": 3, "v": "tie", "w": 20, "dead": False},  # tie: change wins
+        {"k": None, "seq": 2, "v": "n2", "w": 30, "dead": False},
+        {"k": None, "seq": 0, "v": "n-old", "w": 31, "dead": False},
+        {"k": 3, "seq": 9, "v": None, "w": None, "dead": True},  # tombstone
+        {"k": 4, "seq": 0, "v": "stale", "w": 40, "dead": False},  # loses
+        {"k": 6, "seq": 1, "v": "f", "w": 60, "dead": False},
+        {"k": 6, "seq": 2, "v": "f2", "w": 61, "dead": False},  # insert
+        {"k": 7, "seq": 1, "v": None, "w": None, "dead": True},  # no-op
+    ]
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        v = t.merge(
+            spark.createDataFrame(
+                [tuple(r.values()) for r in changes],
+                "k long, seq long, v string, w int, dead boolean",
+            ),
+            delete_col="dead",
+        )
+        cols = ["k", "seq", "v", "w"]
+        kept, images = _python_merge(stored + dups, changes, cols)
+        snap = [tuple(r) for r in t.read().select(*cols).collect()]
+        assert sorted(snap, key=repr) == sorted(kept, key=repr)
+        feed = [tuple(r) for r in t.read_changes(v - 1).select(*cols).collect()]
+        if change_feed:
+            posts = [i[:-1] for i in images if i[-1] in ("insert", "update_postimage")]
+            assert sorted(feed, key=repr) == sorted(posts, key=repr)
+            commit = t._read_commit(v)
+            paths = [a["cdc"]["path"] for a in commit["actions"] if "cdc" in a]
+            on_disk = [
+                tuple(r)
+                for r in spark.read.parquet(*paths)
+                .select(*cols, "_change_type")
+                .collect()
+            ]
+            assert sorted(on_disk, key=repr) == sorted(images, key=repr)
+        else:
+            # every file overlaps the change keys: the add-file feed is
+            # the whole rewritten snapshot
+            assert sorted(feed, key=repr) == sorted(kept, key=repr)
+    finally:
+        spark.conf.set(conf, prev)
+    assert "w" in t.read().columns  # the change set widened the schema
+
+
+def test_merge_single_pass_job_budget(spark, tmp_path):
+    """A change-feed MERGE over numeric keys runs at most five Spark
+    jobs: the change-set checkpoint, the bounds aggregate, and the one
+    write (its shuffle-map and result jobs) — the touched-file rescan,
+    broadcast key distinct, anti/semi joins and ranked checkpoint of
+    the former multi-stage plan are gone."""
+    t = _table(spark, tmp_path, files_per_commit=4, change_feed=True)
+    t.append(
+        spark.createDataFrame(
+            [(k, 0, f"v{k}") for k in range(400)], "k long, seq long, v string"
+        )
+    )
+    changes = spark.createDataFrame(
+        [(k, 1, f"u{k}", k % 7 == 0) for k in range(0, 440, 4)],
+        "k long, seq long, v string, dead boolean",
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("acid-merge-probe", "single-pass merge job budget")
+    try:
+        v = t.merge(changes, delete_col="dead")
+    finally:
+        sc.setJobGroup("acid-merge-probe-done", "")
+    jobs = sc.statusTracker().getJobIdsForGroup("acid-merge-probe")
+    assert len(jobs) <= 5, jobs
+    dead = {k for k in range(0, 440, 4) if k % 7 == 0}
+    want = {k: f"u{k}" if k % 4 == 0 else f"v{k}" for k in range(400)}
+    want.update({k: f"u{k}" for k in range(400, 440, 4)})
+    want = {k: s for k, s in want.items() if k not in dead}
+    assert {r.k: r.v for r in t.read().collect()} == want
+    assert t.read_changes(v - 1).count() == len(range(0, 440, 4)) - len(dead)
+
+
+def test_merge_string_keys_sampled_partitioning_matches_oracle(spark, tmp_path):
+    """String keys cannot be range-modeled from min/max stats, so the
+    merge falls back to the sampled repartitionByRange exchange. The
+    kernel is exact whenever every row of a key lands in one partition,
+    which range partitioning guarantees: over a seeded sequence of
+    merges the snapshot and each commit's feed equal the Python fold."""
+    import random
+
+    t = TxnLogTable(
+        spark, str(tmp_path / "tbl"), key="k", order_col="seq",
+        files_per_commit=3, change_feed=True,
+    )
+    seen = []
+    real_cluster = t._cluster_by_key
+
+    def spy(df, n, cluster, boundaries, order=None):
+        seen.append(boundaries)
+        return real_cluster(df, n, cluster, boundaries, order)
+
+    t._cluster_by_key = spy
+    rng = random.Random(5)
+    stored = [{"k": f"k{i:02d}", "seq": 0, "v": f"v{i}"} for i in range(40)]
+    t.append(
+        spark.createDataFrame(
+            [(r["k"], r["seq"], r["v"]) for r in stored],
+            "k string, seq long, v string",
+        )
+    )
+    cols = ["k", "seq", "v"]
+    state = [dict(r) for r in stored]
+    for seq in range(1, 5):
+        changes = [
+            {"k": f"k{i:02d}", "seq": seq, "v": f"s{seq}.{i}",
+             "dead": rng.random() < 0.2}
+            for i in rng.sample(range(50), 12)
+        ]
+        v = t.merge(
+            spark.createDataFrame(
+                [tuple(r.values()) for r in changes],
+                "k string, seq long, v string, dead boolean",
+            ),
+            delete_col="dead",
+        )
+        kept, images = _python_merge(state, changes, cols)
+        state = [dict(zip(cols, r)) for r in kept]
+        snap = sorted(tuple(r) for r in t.read().select(*cols).collect())
+        assert snap == sorted(kept)
+        feed = sorted(tuple(r) for r in t.read_changes(v - 1).select(*cols).collect())
+        posts = [i[:-1] for i in images if i[-1] in ("insert", "update_postimage")]
+        assert feed == sorted(posts)
+    assert seen and all(b is None for b in seen)  # sampled path every time
