@@ -223,6 +223,14 @@ class CursorAdvanced(ConcurrentModification):
     re-read its cursor and restart from the new position."""
 
 
+def _replayed(state: dict, txn: "dict | None") -> bool:
+    """Does the fold ``state`` already record ``txn``'s batch (or a later
+    batch of the same app)? The exactly-once guard for replays."""
+    return txn is not None and int(txn["batch_id"]) <= int(
+        state["txns"].get(txn["app_id"], -1)
+    )
+
+
 def _canon(p: str) -> str:
     """Canonical path form for identity comparisons: the ``file:`` scheme
     is stripped (Hadoop prints ``file:/x``, ``input_file_name`` prints
@@ -508,16 +516,21 @@ def _add_action(r: dict) -> dict:
 
 
 def _fused_write_partitions(
-    clustered: DataFrame, commit_dir: str, key: str, skip_cols: "list[str]"
+    clustered: DataFrame,
+    out_dir: str,
+    kind: str,
+    key: "str | None" = None,
+    skip_cols: "list[str]" = (),
 ) -> "list[dict]":
-    """The single write+stats job behind ``_write_data_files``: every
-    range partition's task streams its Arrow batches into one parquet
-    file, folding the file's stats as it writes."""
+    """The single write job behind ``_write_data_files`` (``add`` files,
+    stats folded on ``key``) and a restore's change files (``cdc``, no
+    stats): every partition's task streams its Arrow batches into one
+    parquet file."""
 
     def _write_one_partition(batches):
         import pyarrow as pa
 
-        out = _PartFile(commit_dir, "add", key, skip_cols)
+        out = _PartFile(out_dir, kind, key, skip_cols)
         for batch in batches:
             out.write(pa.Table.from_batches([batch]))
         return [out.close()]
@@ -861,16 +874,20 @@ class TxnLogTable:
         return None
 
     def _fold_log(self, version: "int | None" = None) -> dict:
-        """ONE checkpoint read + ONE tail pass producing the complete
-        table state at ``version`` (default: latest): live adds, per-app
-        txn high-water marks, and the recorded schema JSON. Every
-        metadata consumer (snapshot, schema lookup, txn guard,
-        checkpoint writer) goes through this single fold, so a read
-        never replays the same tail twice. The log is dense (see
+        """ONE log listing + ONE checkpoint read + ONE tail pass producing
+        the complete table state at ``version`` (default: latest): live
+        adds, per-app txn high-water marks, the recorded schema JSON,
+        constraints and properties — plus ``version``, the version
+        folded (-1 for a table with no commits), and ``versions``, the
+        commit versions of the listing the fold was built from (so the
+        head is ``versions[-1]``). Every metadata consumer (snapshot,
+        schema lookup, txn guard, commit loop, feeds, checkpoint writer)
+        goes through this single fold, so "what is the head" and "what
+        is the state" come from the same listing and a read never
+        replays the same tail twice. The log is dense (see
         ``_write_text_atomic``), so a checkpoint at ``c`` covers exactly
         the commits ``0..c`` and the tail replay ``c+1..version`` misses
-        nothing. One log listing serves both the commit tail and the
-        checkpoint lookup."""
+        nothing."""
         versions, ckpts = self._log_listing()
         if version is None:
             version = versions[-1] if versions else -1
@@ -919,43 +936,39 @@ class TxnLogTable:
             "schema": schema,
             "constraints": constraints,
             "properties": properties,
+            "version": version,
+            "versions": versions,
         }
 
     def _snapshot_adds(self, version: "int | None" = None) -> "list[dict]":
         """Live add actions at ``version`` (default: latest)."""
         return list(self._fold_log(version)["adds"].values())
 
-    def _commit_mtimes(self) -> "list[tuple[int, float]]":
-        """(version, publish-time epoch seconds) per commit, oldest first.
-        The authoritative time is the ``ts`` recorded INSIDE the commit
-        body at publish (UTC epoch, immune to copy/rsync disturbing file
-        mtimes); commits from before that field existed fall back to the
-        file mtime from the directory listing. Times are made MONOTONE
-        non-decreasing (each stamped at least its predecessor — Delta's
-        rule for AS OF resolution), so clock skew between writers can
-        never make timestamp travel non-deterministic. Commit bodies are
-        immutable, so parsed timestamps are cached per instance — the
-        steady-state cost is one listing + the unseen tail."""
-        fs, jpath = self._fs(self.log_dir)
-        if not fs.exists(jpath):
-            return []
-        raw = {}
-        for st in fs.listStatus(jpath):
-            name = st.getPath().getName()
-            if name.startswith((".", "_")) or not name.endswith(".json"):
-                continue
-            if name.endswith(".checkpoint.json"):
-                continue
-            raw[int(name[: -len(".json")])] = st.getModificationTime() / 1000.0
-        cache = getattr(self, "_commit_ts_cache", None)
-        if cache is None:
-            cache = self._commit_ts_cache = {}
+    def _commit_times(
+        self, versions: "list[int]", body
+    ) -> "list[tuple[int, float]]":
+        """(version, publish-time epoch seconds) for ``versions`` — the
+        commit versions of one listing, oldest first — where ``body(v)``
+        reads commit ``v``. The authoritative time is the ``ts`` recorded
+        INSIDE the commit body at publish (UTC epoch, immune to
+        copy/rsync disturbing file mtimes); only a commit from before
+        that field existed costs a ``getFileStatus`` for its file mtime.
+        Times are made MONOTONE non-decreasing (each stamped at least its
+        predecessor — Delta's rule for AS OF resolution), so clock skew
+        between writers can never make timestamp travel
+        non-deterministic. Commit bodies are immutable, so resolved times
+        are cached per instance — the steady-state cost is the unseen
+        tail."""
+        cache = self.__dict__.setdefault("_commit_ts_cache", {})
         out = []
         prev = float("-inf")
-        for v in sorted(raw):
+        for v in versions:
             if v not in cache:
-                body_ts = self._read_commit(v).get("ts")
-                cache[v] = float(body_ts) if body_ts is not None else raw[v]
+                ts = body(v).get("ts")
+                if ts is None:
+                    fs, jpath = self._fs(self._commit_path(v))
+                    ts = fs.getFileStatus(jpath).getModificationTime() / 1000.0
+                cache[v] = float(ts)
             prev = max(prev, cache[v])
             out.append((v, prev))
         return out
@@ -968,7 +981,7 @@ class TxnLogTable:
         adds = list(state["adds"].values())
         return {
             "path": self.path,
-            "version": self.latest_version(),
+            "version": state["version"],
             "num_files": len(adds),
             "num_rows": sum(int(a.get("rows") or 0) for a in adds),
             "size_bytes": sum(int(a.get("bytes") or 0) for a in adds),
@@ -1003,7 +1016,8 @@ class TxnLogTable:
             ts = timestamp.timestamp()
         else:
             ts = float(timestamp)
-        candidates = [v for v, t in self._commit_mtimes() if t <= ts]
+        times = self._commit_times(self._list_versions(), self._read_commit)
+        candidates = [v for v, t in times if t <= ts]
         if not candidates:
             raise ValueError(
                 f"no commit at or before timestamp {timestamp!r} "
@@ -1013,11 +1027,16 @@ class TxnLogTable:
 
     def history(self) -> "list[dict]":
         """Commit metadata, oldest first — op, version, txn, file deltas,
-        publish timestamp (monotone, epoch seconds)."""
-        mtimes = dict(self._commit_mtimes())
+        publish timestamp (monotone, epoch seconds). One listing; each
+        commit body is read at most once."""
+        import functools
+
+        versions = self._list_versions()
+        body = functools.cache(self._read_commit)
+        times = dict(self._commit_times(versions, body))
         out = []
-        for v in self._list_versions():
-            c = self._read_commit(v)
+        for v in versions:
+            c = body(v)
             out.append(
                 {
                     "version": v,
@@ -1025,7 +1044,7 @@ class TxnLogTable:
                     "txn": c.get("txn"),
                     "n_add": sum(1 for a in c["actions"] if "add" in a),
                     "n_remove": sum(1 for a in c["actions"] if "remove" in a),
-                    "timestamp": mtimes.get(v),
+                    "timestamp": times[v],
                 }
             )
         return out
@@ -1169,7 +1188,8 @@ class TxnLogTable:
         )
         commit_dir = self._new_dir("files")
         records = _fused_write_partitions(
-            clustered, commit_dir, self.key, self._skip_cols(clustered.schema)
+            clustered, commit_dir, "add", self.key,
+            self._skip_cols(clustered.schema),
         )
         return sorted(map(_add_action, records), key=lambda a: a["path"])
 
@@ -1363,6 +1383,74 @@ class TxnLogTable:
             ),
         )
 
+    def _commit(
+        self,
+        op: str,
+        attempt,
+        txn: "dict | None" = None,
+        max_retries: int = 20,
+        state: "dict | None" = None,
+    ) -> "tuple[int | None, dict, list[dict] | None]":
+        """The optimistic-concurrency protocol every write op commits
+        through. Each attempt works against ONE fold of the log
+        (:meth:`_fold_log`, or the caller's ``state`` for the first):
+
+        * a ``txn`` whose batch the fold already records is a replay —
+          return without committing; a ``txn`` whose ``expect`` is not
+          the app's high-water mark raises :class:`CursorAdvanced` (a
+          concurrent consumer of the same app_id folded the span first);
+        * ``attempt(state)`` returns None (nothing to commit) or
+          ``(actions, schema_json, read_paths)``;
+        * the commit is published at ``state["version"] + 1`` with
+          :meth:`_try_commit`.
+
+        Why one fold per attempt suffices: the log is dense and the
+        publish is put-if-absent (``_write_text_atomic``), so version
+        ``v + 1`` can be won only by a writer whose fold saw ``v`` as
+        the head — whatever ``attempt`` checked against the fold
+        (constraints, schema, txn cursor, the files it read) held when
+        the commit landed. The same argument makes it safe to reuse the
+        fold a caller already made for its own preparation: any commit
+        that landed after it occupies ``v + 1``, the publish fails, and
+        a stale fold is never committed on. A lost race folds the log
+        once more; that fold serves the conflict check — a competing
+        commit that removed any of ``read_paths`` raises
+        :class:`ConcurrentModification`, since those rows may have
+        changed — and the next attempt.
+
+        Returns ``(version, state, actions)``: the committed version, the
+        fold it won on and its actions; for a replay the fold's version
+        and None actions; when ``attempt`` had nothing to commit, None
+        and None."""
+        for _ in range(max_retries):
+            if state is None:
+                state = self._fold_log()
+            if _replayed(state, txn):
+                return state["version"], state, None
+            if txn is not None and txn.get("expect") is not None:
+                hw = int(state["txns"].get(txn["app_id"], -1))
+                if hw != int(txn["expect"]):
+                    raise CursorAdvanced(
+                        f"txn cursor for {txn['app_id']!r} advanced to {hw} "
+                        f"(expected {txn['expect']}): a concurrent consumer "
+                        "already folded this span"
+                    )
+            planned = attempt(state)
+            if planned is None:
+                return None, state, None
+            actions, schema, read = planned
+            version = state["version"] + 1
+            if self._try_commit(version, op, actions, txn, schema):
+                return version, state, actions
+            state = self._fold_log()
+            if any(p not in state["adds"] for p in read):
+                raise ConcurrentModification(
+                    f"a competing commit rewrote files this {op} read"
+                )
+        raise ConcurrentModification(
+            f"{op} lost the commit race {max_retries} times"
+        )
+
     # -- public write ops ---------------------------------------------------
 
     def initialize(self, schema: StructType) -> int:
@@ -1392,30 +1480,12 @@ class TxnLogTable:
         compare-and-set on the app's current high-water mark (same
         contract as :meth:`merge`): raise :class:`CursorAdvanced` when a
         concurrent consumer of the same app_id moved it first."""
-        if self.txn_seen(app_id, batch_id):
-            return self.latest_version()
         txn = {"app_id": app_id, "batch_id": int(batch_id)}
-        for _ in range(max_retries):
-            base = self.latest_version()
-            if expect is not None:
-                hw = int(
-                    self._fold_log(base if base >= 0 else None)["txns"].get(
-                        app_id, -1
-                    )
-                )
-                if hw != int(expect):
-                    raise CursorAdvanced(
-                        f"txn cursor for {app_id!r} advanced to {hw} "
-                        f"(expected {expect})"
-                    )
-            v = base + 1
-            if self._try_commit(v, "txn", [], txn):
-                return v
-            if self.txn_seen(app_id, batch_id):
-                return self.latest_version()
-        raise ConcurrentModification(
-            f"record_txn lost the commit race {max_retries} times"
-        )
+        if expect is not None:
+            txn["expect"] = int(expect)
+        return self._commit(
+            "txn", lambda state: ([], None, []), txn, max_retries
+        )[0]
 
     # -- CHECK constraints ----------------------------------------------------
 
@@ -1435,31 +1505,20 @@ class TxnLogTable:
         committing. SQL CHECK semantics: NULL passes, only FALSE
         violates.
 
-        Commit-time conflict rule: the validated snapshot is PINNED to a
-        version, and the alter commits only directly on top of it —
-        winning the publish race at ``validated + 1`` proves (dense log)
-        that no write interleaved between the scan and the alter. If the
-        table advanced, the whole current snapshot is re-validated and
-        the commit re-attempted; a racing writer can therefore never land
-        rows the new constraint has not seen (Delta's metadata-conflict
-        rule, mirrored from the writer side in append/merge)."""
-        validated = None  # version whose full row set passed the check
-        for _ in range(max_retries):
-            base = self.latest_version()
-            if base != validated and base >= 0:
+        Every commit attempt re-validates the whole snapshot of the fold
+        it commits on (see :meth:`_commit`), so a racing writer can never
+        land rows the new constraint has not seen (Delta's
+        metadata-conflict rule, mirrored from the writer side in
+        append/merge)."""
+
+        def attempt(state):
+            if state["version"] >= 0:
                 self._enforce_constraints(
-                    self.read(version=base), {name: expr}, "existing rows"
+                    self._scan(state), {name: expr}, "existing rows"
                 )
-            validated = base
-            if self._try_commit(
-                base + 1, "alter",
-                [{"constraint_add": {"name": name, "expr": expr}}],
-                None,
-            ):
-                return base + 1
-        raise ConcurrentModification(
-            f"add_constraint lost the commit race {max_retries} times"
-        )
+            return [{"constraint_add": {"name": name, "expr": expr}}], None, []
+
+        return self._commit("alter", attempt, max_retries=max_retries)[0]
 
     def add_columns(self, coldefs, max_retries: int = 20) -> int:
         """ALTER TABLE ADD COLUMNS (Delta's explicit schema-evolution
@@ -1476,9 +1535,8 @@ class TxnLogTable:
             if isinstance(coldefs, str)
             else coldefs
         )
-        for _ in range(max_retries):
-            base = self.latest_version()
-            state = self._fold_log(base) if base >= 0 else {"schema": None}
+
+        def attempt(state):
             if not state["schema"]:
                 raise ValueError(
                     "ADD COLUMNS needs a recorded schema — initialize() "
@@ -1499,11 +1557,9 @@ class TxnLogTable:
                     "recorded schema"
                 )
             widened = StructType(list(cur.fields) + list(frag.fields))
-            if self._try_commit(base + 1, "alter", [], None, widened.json()):
-                return base + 1
-        raise ConcurrentModification(
-            f"add_columns lost the commit race {max_retries} times"
-        )
+            return [], widened.json(), []
+
+        return self._commit("alter", attempt, max_retries=max_retries)[0]
 
     def properties(self) -> "dict[str, str]":
         """Active table properties (key -> value), folded through the
@@ -1526,41 +1582,27 @@ class TxnLogTable:
           swallowed — the next write retries it). Bounds the
           fragmentation a continuous-merge workload accumulates without
           an external maintenance scheduler."""
-        for _ in range(max_retries):
-            v = self.latest_version() + 1
-            if self._try_commit(
-                v, "alter",
-                [{"property_set": {"key": str(key), "value": str(value)}}],
-                None,
-            ):
-                return v
-        raise ConcurrentModification(
-            f"set_property lost the commit race {max_retries} times"
-        )
+        action = {"property_set": {"key": str(key), "value": str(value)}}
+        return self._commit(
+            "alter", lambda state: ([action], None, []),
+            max_retries=max_retries,
+        )[0]
 
     def unset_property(self, key: str, max_retries: int = 20) -> int:
         """ALTER TABLE UNSET TBLPROPERTIES: data-free ``alter`` commit."""
-        for _ in range(max_retries):
-            v = self.latest_version() + 1
-            if self._try_commit(
-                v, "alter", [{"property_unset": {"key": str(key)}}], None
-            ):
-                return v
-        raise ConcurrentModification(
-            f"unset_property lost the commit race {max_retries} times"
-        )
+        action = {"property_unset": {"key": str(key)}}
+        return self._commit(
+            "alter", lambda state: ([action], None, []),
+            max_retries=max_retries,
+        )[0]
 
     def drop_constraint(self, name: str, max_retries: int = 20) -> int:
         """ALTER TABLE DROP CONSTRAINT: data-free ``alter`` commit."""
-        for _ in range(max_retries):
-            v = self.latest_version() + 1
-            if self._try_commit(
-                v, "alter", [{"constraint_drop": {"name": name}}], None
-            ):
-                return v
-        raise ConcurrentModification(
-            f"drop_constraint lost the commit race {max_retries} times"
-        )
+        action = {"constraint_drop": {"name": name}}
+        return self._commit(
+            "alter", lambda state: ([action], None, []),
+            max_retries=max_retries,
+        )[0]
 
     def _enforce_constraints(
         self,
@@ -1599,9 +1641,7 @@ class TxnLogTable:
                 f"CHECK constraint(s) violated by {what}: {detail}"
             )
 
-    def _maybe_auto_optimize(
-        self, state: "dict | None", actions: "list[dict]"
-    ) -> None:
+    def _maybe_auto_optimize(self, state: dict, actions: "list[dict]") -> None:
         """Best-effort inline compaction after a write: fires only when
         the ``auto_optimize.file_threshold`` property is set and the
         live file count exceeds it — and always through the SIZE-TARGETED
@@ -1613,13 +1653,12 @@ class TxnLogTable:
         malformed threshold leaves compaction to the next write (the
         data is already safely committed).
 
-        ``state`` is the fold the caller's commit won its CAS on (None
-        for a table with no commits) and ``actions`` that commit's
-        actions: the log is dense, so base fold + actions IS the
-        committed state, and the common unset-threshold case costs no
-        log read at all."""
+        ``state`` is the fold the caller's commit won its CAS on and
+        ``actions`` that commit's actions: the log is dense, so base
+        fold + actions IS the committed state, and the common
+        unset-threshold case costs no log read at all."""
         try:
-            props = state["properties"] if state is not None else {}
+            props = state["properties"]
             thr = props.get("auto_optimize.file_threshold")
             if not thr:
                 return
@@ -1658,70 +1697,62 @@ class TxnLogTable:
         txn: "dict | None" = None,
         max_retries: int = 20,
     ) -> int:
-        """Blind append: new files only, conflicts never destroy work —
-        on a version race the writer re-reads the log and retries the
-        commit (the data files are already safely in place). The txn
-        guard re-checks after every lost race so a duplicate replay that
-        wins the race is detected, not doubled."""
-        if txn is not None and self.txn_seen(txn["app_id"], txn["batch_id"]):
-            return self.latest_version()
-        base0 = self.latest_version()
-        st0 = self._fold_log(base0) if base0 >= 0 else None
-        df = self._align_void_columns(df, st0["schema"] if st0 else None)
-        checked: dict = {}
-        if st0 is not None:
-            if st0["constraints"]:
-                # pin the rows: the CHECK aggregate and the data-file write
-                # are two evaluations of this plan — a non-deterministic
-                # input (rand(), a re-read of a moving source) must not
-                # pass the check and then write different rows
-                df = df.localCheckpoint(eager=True)
-            self._enforce_constraints(
-                df, st0["constraints"], "append batch", st0["schema"]
-            )
-            checked = dict(st0["constraints"])
-            # fail type conflicts BEFORE any data file lands (the in-loop
-            # widen would refuse the commit anyway, but only after
-            # writing orphan files for vacuum to sweep)
-            self._widened_schema_json(st0["schema"], df.schema)
+        """Blind append: new files only. It reads no table files, so no
+        competing commit conflicts with it: a lost publish race commits
+        the already-written files on top of the winner."""
+        st0 = self._fold_log()
+        if _replayed(st0, txn):
+            return st0["version"]
+        df = self._align_void_columns(df, st0["schema"])
+        if st0["constraints"]:
+            # pin the rows: the CHECK aggregate and the data-file write
+            # are two evaluations of this plan — a non-deterministic
+            # input (rand(), a re-read of a moving source) must not
+            # pass the check and then write different rows
+            df = df.localCheckpoint(eager=True)
+        self._enforce_constraints(
+            df, st0["constraints"], "append batch", st0["schema"]
+        )
+        checked = dict(st0["constraints"])
+        # fail type conflicts BEFORE any data file lands (the commit's
+        # widen would refuse anyway, but only after writing orphan files
+        # for vacuum to sweep)
+        self._widened_schema_json(st0["schema"], df.schema)
         adds = self._write_data_files(df)
         actions = [{"add": a} for a in adds]
-        for _ in range(max_retries):
-            base = self.latest_version()
-            state = self._fold_log(base) if base >= 0 else None
-            prev = state["schema"] if state else None
+
+        def attempt(state):
             # a constraint added between the validated snapshot and this
             # commit base must hold for the batch too (Delta's metadata-
             # conflict rule): validate the delta against the WRITTEN
             # files — exactly the rows being committed, immune to a
             # non-deterministic source
-            if state is not None:
-                fresh = {
-                    n: e
-                    for n, e in state["constraints"].items()
-                    if checked.get(n) != e
-                }
-                if fresh and adds:
-                    written = self.spark.read.schema(df.schema).parquet(
-                        *[a["path"] for a in adds]
-                    )
-                    self._enforce_constraints(
-                        written, fresh,
-                        "append batch (constraint added concurrently)",
-                        state["schema"],
-                    )
-                checked.update(fresh)
+            fresh = {
+                n: e
+                for n, e in state["constraints"].items()
+                if checked.get(n) != e
+            }
+            if fresh and adds:
+                written = self.spark.read.schema(df.schema).parquet(
+                    *[a["path"] for a in adds]
+                )
+                self._enforce_constraints(
+                    written, fresh,
+                    "append batch (constraint added concurrently)",
+                    state["schema"],
+                )
+            checked.update(fresh)
             # widen, never narrow: an append whose batch lacks an evolved
             # column must not drop that column from the recorded schema
-            schema = self._widened_schema_json(prev, df.schema)
-            if self._try_commit(base + 1, "append", actions, txn, schema):
-                self._maybe_auto_optimize(state, actions)
-                return base + 1
-            if txn is not None and self.txn_seen(txn["app_id"], txn["batch_id"]):
-                return self.latest_version()
-        raise ConcurrentModification(
-            f"append lost the commit race {max_retries} times"
+            schema = self._widened_schema_json(state["schema"], df.schema)
+            return actions, schema, []
+
+        v, state, committed = self._commit(
+            "append", attempt, txn, max_retries, st0
         )
+        if committed is not None:
+            self._maybe_auto_optimize(state, committed)
+        return v
 
     def merge(
         self,
@@ -1756,19 +1787,13 @@ class TxnLogTable:
         when constraints exist, and a range-sampling job for keys whose
         boundaries cannot be modeled from stats.
 
-        Losing the publish race re-runs conflict detection against the
-        PUBLISHED winner — the log has no claimed-but-unpublished state,
-        so the check can never pass spuriously while a slow competitor
-        is still in flight: if the winner removed a file this merge
-        read, ``ConcurrentModification`` is raised; otherwise the whole
-        merge re-runs on the new snapshot."""
-        if txn is not None and self.txn_seen(txn["app_id"], txn["batch_id"]):
-            return self.latest_version()
-        base0 = self.latest_version()
-        st0 = self._fold_log(base0) if base0 >= 0 else None
-        changes = self._align_void_columns(
-            changes, st0["schema"] if st0 else None
-        )
+        A competing commit that removed a file this merge rewrites makes
+        it raise ``ConcurrentModification`` (see :meth:`_commit`);
+        otherwise a lost race re-runs the rewrite on the new snapshot."""
+        st0 = self._fold_log()
+        if _replayed(st0, txn):
+            return st0["version"]
+        changes = self._align_void_columns(changes, st0["schema"])
         # the change set is consumed by several jobs (bounds, constraint
         # check, the rewrite union, cdc writes): checkpoint ONCE so a
         # non-deterministic input (rand(), a re-read of a moving source)
@@ -1788,18 +1813,14 @@ class TxnLogTable:
             to_check = changes.filter(
                 ~F.coalesce(F.col(delete_col), F.lit(False))
             )
-        checked: dict = {}
-        if st0 is not None:
-            # clean type-conflict refusal up front: without it the
-            # union/rank below surfaces as an opaque runtime CAST error
-            # (or worse, a silent coercion) deep inside the merge plan
-            self._widened_schema_json(st0["schema"], changes.schema)
-            if st0["constraints"]:
-                self._enforce_constraints(
-                    to_check, st0["constraints"], "merge change set",
-                    st0["schema"],
-                )
-            checked = dict(st0["constraints"])
+        # clean type-conflict refusal up front: without it the union
+        # below surfaces as an opaque runtime CAST error (or worse, a
+        # silent coercion) deep inside the merge plan
+        self._widened_schema_json(st0["schema"], changes.schema)
+        self._enforce_constraints(
+            to_check, st0["constraints"], "merge change set", st0["schema"]
+        )
+        checked = dict(st0["constraints"])
         bounds = changes.agg(
             F.min(self.key).alias("lo"),
             F.max(self.key).alias("hi"),
@@ -1822,11 +1843,11 @@ class TxnLogTable:
             # and once vacuum moves the watermark past the stranded cursor
             # every refresh raises). record_txn carries the same
             # compare-and-set contract (``expect``) as the merge itself.
-            if txn is not None:
-                self.record_txn(
-                    txn["app_id"], txn["batch_id"], expect=txn.get("expect")
-                )
-            return self.latest_version()
+            if txn is None:
+                return st0["version"]
+            return self.record_txn(
+                txn["app_id"], txn["batch_id"], expect=txn.get("expect")
+            )
 
         def _overlaps(a: dict) -> bool:
             """A live file is touched if its non-NULL key range overlaps
@@ -1842,19 +1863,9 @@ class TxnLogTable:
                 return True
             return null_changes and int(a.get("null_keys", 1) or 0) > 0
 
-        for attempt in range(max_retries):
-            if (
-                attempt > 0
-                and txn is not None
-                and self.txn_seen(txn["app_id"], txn["batch_id"])
-            ):
-                return self.latest_version()
-            base_version = self.latest_version()
-            state = self._fold_log(base_version if base_version >= 0 else None)
+        def attempt(state):
             # a constraint added since the snapshot this merge validated
-            # against must hold for the change set too — winning the CAS
-            # at base_version + 1 proves (dense log) the fold here is the
-            # commit's direct parent, so nothing can slip between
+            # against must hold for the change set too
             fresh_c = {
                 n: e
                 for n, e in state["constraints"].items()
@@ -1867,27 +1878,12 @@ class TxnLogTable:
                     state["schema"],
                 )
                 checked.update(fresh_c)
-            # compare-and-set on the txn cursor: when the caller read its
-            # input span at high-water ``expect``, any OTHER writer of the
-            # same app_id landing first makes this merge a double-apply.
-            # The check runs against the same fold the commit attempt is
-            # based on, and a lost publish race loops back here — so the
-            # guard is atomic with the put-if-absent publish itself.
-            if txn is not None and txn.get("expect") is not None:
-                hw = int(state["txns"].get(txn["app_id"], -1))
-                if hw != int(txn["expect"]):
-                    raise CursorAdvanced(
-                        f"txn cursor for {txn['app_id']!r} advanced to {hw} "
-                        f"(expected {txn['expect']}): a concurrent consumer "
-                        "already folded this span"
-                    )
-            live = list(state["adds"].values())
             base_schema = (
                 StructType.fromJson(json.loads(state["schema"]))
                 if state["schema"]
                 else None
             )
-            touched = [a for a in live if _overlaps(a)]
+            touched = [a for a in state["adds"].values() if _overlaps(a)]
             # zero-job key-distribution model for the data write's range
             # boundaries: every touched file's recorded non-null key span
             # + the change set's bounds and count (all already in hand)
@@ -1943,29 +1939,18 @@ class TxnLogTable:
                 + [{"remove": {"path": a["path"]}} for a in touched]
                 + [{"cdc": {"path": p}} for p in cdc_files]
             )
-            if self._try_commit(
-                base_version + 1,
-                "merge",
-                actions,
-                txn,
-                # widen, never narrow: a merge whose touched set missed the
-                # wide files (or touched nothing) must not drop evolved
-                # columns from the recorded schema
-                self._widened_schema_json(state["schema"], data_schema),
-            ):
-                self._maybe_auto_optimize(state, actions)
-                return base_version + 1
-            # lost the publish race: the winner IS published (dense log),
-            # so this check is against real state, never an in-flight claim
-            now_live = {a["path"] for a in self._snapshot_adds()}
-            if any(a["path"] not in now_live for a in touched):
-                raise ConcurrentModification(
-                    "a competing commit rewrote files this merge read"
-                )
-            # winner was a blind append elsewhere — re-run on new snapshot
-        raise ConcurrentModification(
-            f"merge lost the commit race {max_retries} times"
+            # widen, never narrow: a merge whose touched set missed the
+            # wide files (or touched nothing) must not drop evolved
+            # columns from the recorded schema
+            schema = self._widened_schema_json(state["schema"], data_schema)
+            return actions, schema, [a["path"] for a in touched]
+
+        v, state, committed = self._commit(
+            "merge", attempt, txn, max_retries, st0
         )
+        if committed is not None:
+            self._maybe_auto_optimize(state, committed)
+        return v
 
     @staticmethod
     def _canon_path_col():
@@ -2060,29 +2045,17 @@ class TxnLogTable:
             derived = conjuncts_from_condition(condition)
             if derived:
                 prune = derived + list(prune or [])
-        if txn is not None and self.txn_seen(txn["app_id"], txn["batch_id"]):
-            return self.latest_version()
-        for attempt in range(max_retries):
-            if (
-                attempt > 0
-                and txn is not None
-                and self.txn_seen(txn["app_id"], txn["batch_id"])
-            ):
-                return self.latest_version()
-            base_version = self.latest_version()
-            if base_version < 0:
+
+        def no_match():
+            # nothing to rewrite: a provided txn cursor still advances
+            if txn is not None:
+                self.record_txn(
+                    txn["app_id"], txn["batch_id"], expect=txn.get("expect")
+                )
+
+        def attempt(state):
+            if state["version"] < 0:
                 return None
-            state = self._fold_log(base_version)
-            # same compare-and-set contract as merge: a caller that read
-            # its input at cursor ``expect`` must not double-apply after
-            # a concurrent consumer of the same app_id advanced it
-            if txn is not None and txn.get("expect") is not None:
-                hw = int(state["txns"].get(txn["app_id"], -1))
-                if hw != int(txn["expect"]):
-                    raise CursorAdvanced(
-                        f"txn cursor for {txn['app_id']!r} advanced to "
-                        f"{hw} (expected {txn['expect']})"
-                    )
             live = list(state["adds"].values())
             if prune is not None:
                 # log-stats file skipping BEFORE the hit-scan: the
@@ -2090,12 +2063,7 @@ class TxnLogTable:
                 # condition, so files they rule out cannot hold a match
                 live = [a for a in live if _stats_may_match(a, prune)]
             if not live:
-                if txn is not None:
-                    self.record_txn(
-                        txn["app_id"], txn["batch_id"],
-                        expect=txn.get("expect"),
-                    )
-                return None
+                return no_match()
             sch = (
                 StructType.fromJson(json.loads(state["schema"]))
                 if state["schema"]
@@ -2132,12 +2100,7 @@ class TxnLogTable:
                 .collect()
             }
             if not hit:
-                if txn is not None:
-                    self.record_txn(
-                        txn["app_id"], txn["batch_id"],
-                        expect=txn.get("expect"),
-                    )
-                return None
+                return no_match()
             touched = [a for a in live if a["path"] in hit]
             old = reader.parquet(*[a["path"] for a in touched])
             if self.change_feed:
@@ -2216,22 +2179,10 @@ class TxnLogTable:
                 + [{"remove": {"path": a["path"]}} for a in touched]
                 + [{"cdc": {"path": p}} for p in cdc_files]
             )
-            if self._try_commit(
-                base_version + 1,
-                op,
-                actions,
-                txn,
-                self._widened_schema_json(state["schema"], new_df.schema),
-            ):
-                return base_version + 1
-            now_live = {a["path"] for a in self._snapshot_adds()}
-            if any(a["path"] not in now_live for a in touched):
-                raise ConcurrentModification(
-                    f"a competing commit rewrote files this {op} read"
-                )
-        raise ConcurrentModification(
-            f"{op} lost the commit race {max_retries} times"
-        )
+            schema = self._widened_schema_json(state["schema"], new_df.schema)
+            return actions, schema, [a["path"] for a in touched]
+
+        return self._commit(op, attempt, txn, max_retries)[0]
 
     def _write_merge_files(
         self,
@@ -2338,28 +2289,6 @@ class TxnLogTable:
         )
         return self._cdc_paths(records, cdc_dir, cdc.schema), adds
 
-    def _write_cdc(self, frames: "list[DataFrame]") -> "list[str]":
-        """Union ``_change_type``-tagged frames and materialize them as
-        this commit's change files; returns the part-file paths (stored
-        as ``cdc`` actions; attempt files orphaned by a lost commit race
-        are swept by vacuum's change-file pass)."""
-        out = frames[0]
-        for p in frames[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        cdc_dir = f"{self.path}/changes/c-{uuid.uuid4().hex}"
-        out.coalesce(self.files_per_commit).write.mode("overwrite").parquet(
-            cdc_dir
-        )
-        fs, jdir = self._fs(cdc_dir)
-        paths = []
-        it = fs.listFiles(jdir, False)
-        while it.hasNext():
-            st = it.next()
-            p = _canon_uri(st.getPath().toString())
-            if p.rsplit("/", 1)[-1].startswith("part-"):
-                paths.append(p)
-        return sorted(paths)
-
     def _with_zvalue(
         self, df: DataFrame, cols: "list[str]", bits: int = 6
     ) -> DataFrame:
@@ -2444,10 +2373,9 @@ class TxnLogTable:
         selectivity (many overlapping [min,max] ranges). Returns the new
         version, or None when the live file count is already at or below
         ``max(min_files, files_per_commit)`` (compacting again would just
-        rewrite the same files). Concurrency: same optimistic
-        rule as MERGE — losing the publish race to a commit that removed
-        a source file raises ``ConcurrentModification``; losing to a
-        blind append re-runs on the new snapshot.
+        rewrite the same files). A competing commit that removed a
+        source file raises ``ConcurrentModification`` (see
+        :meth:`_commit`).
 
         ``cluster_by=[c1, c2, ...]`` is OPTIMIZE ZORDER BY: the rewrite
         clusters files on the interleaved-bit z-value of the listed
@@ -2474,39 +2402,34 @@ class TxnLogTable:
         count as candidates with size 0 so legacy fragmentation still
         compacts. ``cluster_by`` composes: the selected bin is laid out
         on the z-value, untouched files keep their layout."""
-        for _ in range(max_retries):
-            base_version = self.latest_version()
-            if base_version < 0:
-                return None
-            state = self._fold_log(base_version)
+
+        def attempt(state):
             live = list(state["adds"].values())
             if not live:
                 return None
-            if cluster_by is None and state["properties"].get("zorder.columns"):
+            props = state["properties"]
+            zorder = cluster_by
+            if zorder is None and props.get("zorder.columns"):
                 # the table's recorded layout choice sticks across plain
                 # maintenance runs (see set_property)
-                cluster_by = [
+                zorder = [
                     c.strip()
-                    for c in state["properties"]["zorder.columns"].split(",")
+                    for c in props["zorder.columns"].split(",")
                     if c.strip()
                 ]
+            tgt = target_file_bytes
             if (
-                target_file_bytes is None
+                tgt is None
                 and min_file_bytes is None
-                and state["properties"].get("optimize.target_file_bytes")
+                and props.get("optimize.target_file_bytes")
             ):
                 # recorded size policy: a plain optimize()/OPTIMIZE
                 # statement on a table that declared its target file
                 # size runs the bounded bin-packed pass, same as the
                 # zorder.columns layout property above
-                target_file_bytes = int(
-                    state["properties"]["optimize.target_file_bytes"]
-                )
-            size_targeted = (
-                target_file_bytes is not None or min_file_bytes is not None
-            )
-            if size_targeted:
-                tgt = target_file_bytes or 128 * 1024 * 1024
+                tgt = int(props["optimize.target_file_bytes"])
+            if tgt is not None or min_file_bytes is not None:
+                tgt = tgt or 128 * 1024 * 1024
                 floor = min_file_bytes if min_file_bytes is not None else tgt // 2
                 rewrite = sorted(
                     (a for a in live if int(a.get("bytes") or 0) < floor),
@@ -2526,7 +2449,7 @@ class TxnLogTable:
                 total = sum(int(a.get("bytes") or 0) for a in rewrite)
                 n_out = max(1, -(-total // tgt))
             else:
-                if cluster_by is None and len(live) <= max(
+                if zorder is None and len(live) <= max(
                     min_files, self.files_per_commit
                 ):
                     return None
@@ -2545,8 +2468,8 @@ class TxnLogTable:
             # the recorded schema must never include __zorder_* scaffolding
             commit_schema = df.schema.json()
             cluster_expr = None
-            if cluster_by is not None:
-                df = self._with_zvalue(df, cluster_by)
+            if zorder is not None:
+                df = self._with_zvalue(df, zorder)
                 cluster_expr = F.col("__zorder_z")
             adds = self._write_data_files(
                 df, cluster_expr=cluster_expr, n_files=n_out
@@ -2554,18 +2477,9 @@ class TxnLogTable:
             actions = [{"add": a} for a in adds] + [
                 {"remove": {"path": a["path"]}} for a in rewrite
             ]
-            if self._try_commit(
-                base_version + 1, "optimize", actions, None, commit_schema
-            ):
-                return base_version + 1
-            now_live = {a["path"] for a in self._snapshot_adds()}
-            if any(a["path"] not in now_live for a in rewrite):
-                raise ConcurrentModification(
-                    "a competing commit rewrote files this optimize read"
-                )
-        raise ConcurrentModification(
-            f"optimize lost the commit race {max_retries} times"
-        )
+            return actions, commit_schema, [a["path"] for a in rewrite]
+
+        return self._commit("optimize", attempt, max_retries=max_retries)[0]
 
     def restore(
         self,
@@ -2613,11 +2527,12 @@ class TxnLogTable:
             version = self.version_at(timestamp)
         if version is None:
             raise ValueError("restore needs a version or timestamp")
-        for _ in range(max_retries):
-            base = self.latest_version()
-            if version > base:
+
+        def attempt(state):
+            if version > state["version"]:
                 raise ValueError(
-                    f"cannot restore to version {version} (latest {base})"
+                    f"cannot restore to version {version} "
+                    f"(latest {state['version']})"
                 )
             wm = self._vacuum_watermark()
             if version < wm:
@@ -2625,11 +2540,10 @@ class TxnLogTable:
                     f"version {version} was vacuumed (earliest retained: "
                     f"{wm})"
                 )
-            if version == base:
+            if version == state["version"]:
                 return None
-            cur_state = self._fold_log(base)
             tgt_state = self._fold_log(version)
-            cur_adds = cur_state["adds"]
+            cur_adds = state["adds"]
             tgt_adds = tgt_state["adds"]
             if set(cur_adds) == set(tgt_adds):
                 return None  # intervening commits were data-free
@@ -2640,60 +2554,47 @@ class TxnLogTable:
                 for p in cur_adds
                 if p not in tgt_adds
             ]
-            cdc_files: "list[str]" = []
-            if self.change_feed:
-                frames = self._restore_change_frames(
-                    cur_state, tgt_state, base, version
-                )
-                if frames:
-                    cdc_files = self._write_cdc(frames)
-                    actions += [{"cdc": {"path": p}} for p in cdc_files]
-            if self._try_commit(
-                base + 1, "restore", actions, None, tgt_state["schema"]
-            ):
-                return base + 1
-            # lost the publish race: recompute the whole diff against the
-            # new head (the winner changed what "current" means)
-        raise ConcurrentModification(
-            f"restore lost the commit race {max_retries} times"
-        )
-
-    def _restore_change_frames(
-        self, cur_state: dict, tgt_state: dict, base: int, version: int
-    ) -> "list[DataFrame]":
-        """Row-level images for a restore commit: keyed diff of the
-        current snapshot against the target snapshot (see
-        :meth:`restore`). One full-outer join on the merge key; row
-        equality is NULL-safe over the union of both schemas' columns."""
-
-        def _snap(state):
-            adds = list(state["adds"].values())
-            sch = (
-                StructType.fromJson(json.loads(state["schema"]))
-                if state["schema"]
+            images = (
+                self._restore_changes(state, tgt_state)
+                if self.change_feed
                 else None
             )
-            if not adds:
-                return (
-                    self.spark.createDataFrame([], sch)
-                    if sch is not None
-                    else None
+            if images is not None:
+                cdc_dir = self._new_dir("changes")
+                records = _fused_write_partitions(
+                    images.coalesce(self.files_per_commit), cdc_dir, "cdc"
                 )
-            reader = (
-                self.spark.read.schema(sch)
-                if sch is not None
-                else self.spark.read
-            )
-            return reader.parquet(*[a["path"] for a in adds])
+                actions += [
+                    {"cdc": {"path": p}}
+                    for p in self._cdc_paths(records, cdc_dir, images.schema)
+                ]
+            # no read set: a lost race re-diffs against the new head
+            return actions, tgt_state["schema"], []
+
+        return self._commit("restore", attempt, max_retries=max_retries)[0]
+
+    def _restore_changes(
+        self, cur_state: dict, tgt_state: dict
+    ) -> "DataFrame | None":
+        """Row-level images for a restore commit, tagged
+        ``_change_type``: keyed diff of the current snapshot against the
+        target snapshot (see :meth:`restore`). One full-outer join on the
+        merge key; row equality is NULL-safe over the union of both
+        schemas' columns. None when neither snapshot has a schema."""
+
+        def _snap(state):
+            if state["adds"] or state["schema"]:
+                return self._scan(state)
+            return None
 
         cur = _snap(cur_state)
         tgt = _snap(tgt_state)
         if cur is None and tgt is None:
-            return []
+            return None
         if cur is None:
-            return [tgt.withColumn("_change_type", F.lit("insert"))]
+            return tgt.withColumn("_change_type", F.lit("insert"))
         if tgt is None:
-            return [cur.withColumn("_change_type", F.lit("delete"))]
+            return cur.withColumn("_change_type", F.lit("delete"))
         # union of columns, in a stable order; missing columns read NULL
         # of the OTHER side's recorded type
         all_cols = list(
@@ -2757,8 +2658,7 @@ class TxnLogTable:
         post = both.select("tr.*").withColumn(
             "_change_type", F.lit("update_postimage")
         )
-        frames = [inserts, deletes, pre, post]
-        return frames
+        return inserts.unionByName(deletes).unionByName(pre).unionByName(post)
 
     # -- read ops -----------------------------------------------------------
 
@@ -2790,20 +2690,30 @@ class TxnLogTable:
             if version is not None:
                 raise ValueError("pass version OR timestamp, not both")
             version = self.version_at(timestamp)
-        latest = self.latest_version()
+        state = self._fold_log(version)
+        latest = state["versions"][-1] if state["versions"] else -1
         if latest < 0:
             raise ValueError("table has no commits")
-        effective = latest if version is None else version
-        if effective > latest:
-            raise ValueError(f"version {effective} does not exist (latest {latest})")
-        wm = self._vacuum_watermark()
-        if effective < wm:
+        if state["version"] > latest:
             raise ValueError(
-                f"version {effective} was vacuumed (earliest retained: {wm})"
+                f"version {state['version']} does not exist (latest {latest})"
             )
-        # fold at the PINNED version just validated — folding at None would
-        # re-list and could observe a newer latest than the one checked
-        state = self._fold_log(effective)  # ONE checkpoint + tail pass
+        wm = self._vacuum_watermark()
+        if state["version"] < wm:
+            raise ValueError(
+                f"version {state['version']} was vacuumed (earliest "
+                f"retained: {wm})"
+            )
+        return self._scan(state)
+
+    def _scan(self, state: dict) -> DataFrame:
+        """The snapshot a fold describes, as a DataFrame over its live
+        files. The schema recorded AT the fold's version pins the read:
+        after schema evolution, files written pre-widening simply surface
+        NULL for the newer columns (parquet reader fills missing
+        columns), and time travel to an old version reads the OLD schema
+        — per-version fidelity without mergeSchema footers. A snapshot
+        with no live files reads as an empty DataFrame of that schema."""
         adds = list(state["adds"].values())
         schema = (
             StructType.fromJson(json.loads(state["schema"]))
@@ -2812,18 +2722,16 @@ class TxnLogTable:
         )
         if not adds:
             if schema is None:
-                raise ValueError(f"no schema recorded at version {version!r}")
+                raise ValueError(
+                    f"no schema recorded at version {state['version']}"
+                )
             return self.spark.createDataFrame([], schema)
-        if schema is not None:
-            # the recorded schema AT this version pins the read: after
-            # schema evolution, files written pre-widening simply surface
-            # NULL for the newer columns (parquet reader fills missing
-            # columns), and time travel to an old version reads the OLD
-            # schema — per-version fidelity without mergeSchema footers
-            return self.spark.read.schema(schema).parquet(
-                *[a["path"] for a in adds]
-            )
-        return self.spark.read.parquet(*[a["path"] for a in adds])
+        reader = (
+            self.spark.read.schema(schema)
+            if schema is not None
+            else self.spark.read
+        )
+        return reader.parquet(*[a["path"] for a in adds])
 
     def file_count(self, version: "int | None" = None) -> int:
         return len(self._snapshot_adds(version))
@@ -2924,27 +2832,20 @@ class TxnLogTable:
         broadcast path->version map joined on ``input_file_name()`` —
         a full-history replay over thousands of commits stays a
         handful of scan nodes."""
-        latest = self.latest_version()
-        if since_version >= latest:
-            schema = self._latest_schema()
-            if schema is None:
-                raise ValueError("table has no commits")
-            empty = self.spark.createDataFrame([], schema)
-            return empty.withColumn(
-                "_commit_version", F.lit(None).cast("long")
-            ).withColumn("_commit_op", F.lit(None).cast("string"))
-        wm = self._vacuum_watermark()
-        if since_version + 1 < wm:
-            raise ValueError(
-                f"changes since {since_version} include vacuumed versions "
-                f"(earliest retained: {wm})"
-            )
+        state = self._fold_log(since_version)
+        if since_version < max(state["versions"], default=-1):
+            wm = self._vacuum_watermark()
+            if since_version + 1 < wm:
+                raise ValueError(
+                    f"changes since {since_version} include vacuumed "
+                    f"versions (earliest retained: {wm})"
+                )
         # post-image feed: removed files never replay
-        groups = self._feed_groups(
-            since_version, skip_optimize=False, kinds=("cdc", "add")
+        groups, schema_json = self._feed_groups(
+            state, skip_optimize=False, kinds=("cdc", "add")
         )
         if not groups:
-            return self.read_changes(latest)  # typed empty frame
+            return self._empty_changes(schema_json)
 
         def _post_images(kind, scan):
             if kind == "cdc":
@@ -2957,27 +2858,27 @@ class TxnLogTable:
 
     def _feed_groups(
         self,
-        since_version: int,
+        state: dict,
         skip_optimize: bool,
         require_row_level: bool = False,
         kinds: "tuple[str, ...]" = ("cdc", "add", "remove"),
-    ) -> "dict[tuple, list]":
-        """ONE commit-tail walk shared by every feed: the skip rules,
-        the incremental schema-epoch tracking, and the
-        cdc-vs-add-vs-remove grouping. Returns
-        ``{(kind, schema_json): [(path, version, op), ...]}`` with kind
-        in {'cdc', 'add', 'remove'} — callers pick the kinds their
-        semantics need. ``require_row_level`` raises on a merge commit
-        without change files (read_row_changes' fidelity contract).
-        Each commit file is read exactly once; the schema is tracked
-        incrementally (a per-commit _latest_schema would re-fold the
-        log O(tail) times)."""
-        schema_json = (
-            self._fold_log(since_version)["schema"] if since_version >= 0 else None
-        )
+    ) -> "tuple[dict[tuple, list], str | None]":
+        """ONE commit-tail walk shared by every feed over the commits
+        after the fold ``state`` (the feed's cursor), up to the head of
+        the listing that fold was built from: the skip rules, the
+        incremental schema-epoch tracking, and the cdc-vs-add-vs-remove
+        grouping. Returns ``({(kind, schema_json): [(path, version, op),
+        ...]}, head schema_json)`` with kind in {'cdc', 'add', 'remove'}
+        — callers pick the kinds their semantics need.
+        ``require_row_level`` raises on a merge commit without change
+        files (read_row_changes' fidelity contract). Each commit file is
+        read exactly once; the schema is tracked incrementally (a
+        per-commit _latest_schema would re-fold the log O(tail)
+        times)."""
+        schema_json = state["schema"]
         groups: "dict[tuple, list]" = {}
-        for v in self._list_versions():
-            if v <= since_version:
+        for v in state["versions"]:
+            if v <= state["version"]:
                 continue
             c = self._read_commit(v)
             if c.get("schema") is not None:
@@ -3015,7 +2916,19 @@ class TxnLogTable:
                 groups.setdefault(("remove", schema_json), []).extend(
                     (p, v, c["op"]) for p in removed
                 )
-        return groups
+        return groups, schema_json
+
+    def _empty_changes(self, schema_json: "str | None") -> DataFrame:
+        """:meth:`read_changes`' typed empty frame: the head's recorded
+        schema plus the feed's ``_commit_version``/``_commit_op``."""
+        if schema_json is None:
+            raise ValueError("table has no commits")
+        empty = self.spark.createDataFrame(
+            [], StructType.fromJson(json.loads(schema_json))
+        )
+        return empty.withColumn(
+            "_commit_version", F.lit(None).cast("long")
+        ).withColumn("_commit_op", F.lit(None).cast("string"))
 
     def _assemble_feed(
         self,
@@ -3123,24 +3036,23 @@ class TxnLogTable:
         commit's row-level deletes are unrecoverable, and silently
         degrading to whole-file post-images would corrupt a replica.
         Same O(schema epochs) plan bound as ``read_changes``."""
-        latest = self.latest_version()
-        if since_version >= latest:
-            base = self.read_changes(latest).drop("_commit_op")
-            return base.withColumn("_change_type", F.lit(None).cast("string"))
-        wm = self._vacuum_watermark()
-        if since_version + 1 < wm:
-            raise ValueError(
-                f"row changes since {since_version} include vacuumed "
-                f"versions (earliest retained: {wm})"
-            )
-        groups = self._feed_groups(
-            since_version,
+        state = self._fold_log(since_version)
+        if since_version < max(state["versions"], default=-1):
+            wm = self._vacuum_watermark()
+            if since_version + 1 < wm:
+                raise ValueError(
+                    f"row changes since {since_version} include vacuumed "
+                    f"versions (earliest retained: {wm})"
+                )
+        groups, schema_json = self._feed_groups(
+            state,
             skip_optimize=True,
             require_row_level=True,
             kinds=("cdc", "add"),
         )
         if not groups:
-            return self.read_row_changes(latest)  # typed empty frame
+            empty = self._empty_changes(schema_json).drop("_commit_op")
+            return empty.withColumn("_change_type", F.lit(None).cast("string"))
 
         def _typed(kind, scan):
             if kind != "cdc":
@@ -3217,23 +3129,24 @@ class TxnLogTable:
         files were live only BEFORE it, so replaying deltas needs
         ``since_version >= watermark`` (the removed files of commit
         ``wm`` itself may already be reclaimed)."""
-        latest = self.latest_version()
-        if since_version >= latest:
-            empty = self.read_changes(latest).drop("_commit_op")
-            return empty.withColumn("_weight", F.lit(None).cast("int"))
-        wm = self._vacuum_watermark()
-        # commit c's REMOVED files were live only at c-1; after a vacuum
-        # to watermark wm, the first commit whose pre-image is guaranteed
-        # on disk is wm+1 — so the earliest safe cursor is wm (wm == 0
-        # means never vacuumed: every image exists and cursor -1 is fine)
-        if wm > 0 and since_version < wm:
-            raise ValueError(
-                f"deltas since {since_version} need pre-{wm} file images "
-                f"that vacuum may have reclaimed (earliest safe cursor: {wm})"
-            )
-        groups = self._feed_groups(since_version, skip_optimize=True)
+        state = self._fold_log(since_version)
+        if since_version < max(state["versions"], default=-1):
+            wm = self._vacuum_watermark()
+            # commit c's REMOVED files were live only at c-1; after a
+            # vacuum to watermark wm, the first commit whose pre-image is
+            # guaranteed on disk is wm+1 — so the earliest safe cursor is
+            # wm (wm == 0 means never vacuumed: every image exists and
+            # cursor -1 is fine)
+            if wm > 0 and since_version < wm:
+                raise ValueError(
+                    f"deltas since {since_version} need pre-{wm} file "
+                    f"images that vacuum may have reclaimed (earliest safe "
+                    f"cursor: {wm})"
+                )
+        groups, schema_json = self._feed_groups(state, skip_optimize=True)
         if not groups:
-            return self.read_deltas(latest)  # typed empty frame
+            empty = self._empty_changes(schema_json).drop("_commit_op")
+            return empty.withColumn("_weight", F.lit(None).cast("int"))
 
         def _signed(kind, scan):
             if kind == "cdc":

@@ -146,13 +146,9 @@ class IncrementalAggregate:
         # target whose ONLY commits are data-free txn cursor advances
         # (possible when the source history STARTS with alter/optimize
         # commits) has no snapshot to read — that is still the first fold
-        t_state = (
-            self.target._fold_log()
-            if self.target.latest_version() >= 0
-            else None
-        )
-        if t_state is not None and (t_state["adds"] or t_state["schema"]):
-            current = self.target.read().select(
+        t_state = self.target._fold_log()
+        if t_state["adds"] or t_state["schema"]:
+            current = self.target._scan(t_state).select(
                 g,
                 F.col("n_rows").alias("__c_rows"),
                 *[
@@ -193,7 +189,7 @@ class IncrementalAggregate:
                 for c in self.sum_cols
             ],
         ).withColumn("__deleted", F.col("n_rows") <= 0)
-        self.target.merge(
+        return self.target.merge(
             new_rows,
             delete_col="__deleted",
             txn={
@@ -205,7 +201,6 @@ class IncrementalAggregate:
                 "expect": int(cur),
             },
         )
-        return self.target.latest_version()
 
     def read(self) -> DataFrame:
         """Current aggregate snapshot (group, n_rows, sum_* columns)."""

@@ -143,6 +143,148 @@ def test_commit_race_append_retries_merge_conflicts(spark, tmp_path):
         )
 
 
+_S = "k long, seq long, v string"
+
+# every write op, as a call on a table built by _race_table (head 2,
+# three files of keys 1-4 / 5-8 / 9-12)
+_WRITE_OPS = {
+    "record_txn": lambda t, spark: t.record_txn("app", 3),
+    "add_constraint": lambda t, spark: t.add_constraint("k_pos", "k > 0"),
+    "add_columns": lambda t, spark: t.add_columns("w DOUBLE"),
+    "set_property": lambda t, spark: t.set_property("owner", "ops"),
+    "unset_property": lambda t, spark: t.unset_property("owner"),
+    "drop_constraint": lambda t, spark: t.drop_constraint("k_pos"),
+    "append": lambda t, spark: t.append(
+        spark.createDataFrame([(20, 1, "new")], _S)
+    ),
+    "merge": lambda t, spark: t.merge(
+        spark.createDataFrame([(1, 9, "m")], _S)
+    ),
+    "delete_where": lambda t, spark: t.delete_where("k = 2"),
+    "update_where": lambda t, spark: t.update_where("k = 3", {"v": "'u'"}),
+    "optimize": lambda t, spark: t.optimize(),
+    "restore": lambda t, spark: t.restore(version=1),
+}
+
+
+def _race_table(spark, tmp_path) -> TxnLogTable:
+    t = _table(spark, tmp_path, files_per_commit=1)
+    for lo in (1, 5, 9):
+        t.append(
+            spark.createDataFrame(
+                [(k, 1, f"v{k}") for k in range(lo, lo + 4)], _S
+            )
+        )
+    return t
+
+
+@pytest.mark.parametrize("op", sorted(_WRITE_OPS))
+def test_every_write_op_retries_past_a_harmless_competitor(
+    spark, tmp_path, op
+):
+    """Each write op commits through the one optimistic loop: a
+    competing data-free commit landing at the op's version makes it
+    re-fold and land one version later."""
+    t = _race_table(spark, tmp_path)
+    _inject_racing_commit(t, lambda: [])
+    assert _WRITE_OPS[op](t, spark) == 4
+    assert t._read_commit(3)["op"] == "competing"
+    assert t._list_versions() == [0, 1, 2, 3, 4]
+
+
+@pytest.mark.parametrize(
+    "op", ["merge", "delete_where", "update_where", "optimize", "restore"]
+)
+def test_file_removing_competitor_conflicts_or_restore_rediffs(
+    spark, tmp_path, op
+):
+    """A competing commit that removes a file the op read (keys 1-4)
+    raises ConcurrentModification for the ops that rewrite what they
+    read; restore reads no files and re-diffs against the new head, so
+    its commit still lands the target snapshot exactly."""
+    t = _race_table(spark, tmp_path)
+    first = [a for a in t._snapshot_adds() if a["min_key"] == 1][0]
+    _inject_racing_commit(t, lambda: [{"remove": {"path": first["path"]}}])
+    if op != "restore":
+        with pytest.raises(ConcurrentModification, match="files this"):
+            _WRITE_OPS[op](t, spark)
+        assert t.latest_version() == 3
+        return
+    assert _WRITE_OPS[op](t, spark) == 4
+    assert {a["path"] for a in t._snapshot_adds()} == {
+        a["path"] for a in t._snapshot_adds(1)
+    }
+    assert _rows(t) == _rows(t, version=1)
+
+
+def test_commit_protocol_lists_and_folds_the_log_once(spark, tmp_path):
+    """An uncontended txn merge makes ONE log listing and ONE fold — the
+    fold that aligns the change set also serves the txn guard and the
+    commit attempt — plus one of each for the checkpoint written at a
+    checkpoint version. read() and read_changes() list once."""
+    from collections import Counter
+
+    t = _table(spark, tmp_path, checkpoint_interval=4)
+    calls = Counter()
+    for name in ("_log_listing", "_fold_log"):
+
+        def counted(*a, _orig=getattr(t, name), _name=name, **kw):
+            calls[_name] += 1
+            return _orig(*a, **kw)
+
+        setattr(t, name, counted)
+    for b in range(6):
+        calls.clear()
+        v = t.merge(
+            spark.createDataFrame([(b, b, "x"), (b + 1, b, "y")], _S),
+            txn={"app_id": "app", "batch_id": b},
+        )
+        n = 2 if v == 4 else 1
+        assert calls == {"_log_listing": n, "_fold_log": n}, (v, calls)
+    calls.clear()
+    t.read()
+    assert calls["_log_listing"] == 1, calls
+    calls.clear()
+    t.read_changes(2)
+    assert calls["_log_listing"] == 1, calls
+
+
+def test_history_reads_each_body_once_and_dates_legacy_commits_by_mtime(
+    spark, tmp_path
+):
+    """A commit body without an in-body ``ts`` (written before the field
+    existed) resolves by its file's mtime in both history() and
+    version_at(); history() reads each commit body at most once."""
+    import os
+    import time
+
+    t = _table(spark, tmp_path)
+    for k in range(3):
+        t.append(spark.createDataFrame([(k, 1, "a")], _S))
+    legacy = {"version": 3, "op": "append", "actions": [], "txn": None}
+    assert t._write_text_atomic(t._commit_path(3), json.dumps(legacy))
+    mtime = time.time() + 1000
+    os.utime(t._commit_path(3), (mtime, mtime))
+
+    reads = []
+    orig = t._read_text
+
+    def counted(p):
+        reads.append(p)
+        return orig(p)
+
+    t._read_text = counted
+    h = t.history()
+    t._read_text = orig
+    assert [x["version"] for x in h] == [0, 1, 2, 3]
+    assert len(reads) == len(set(reads)) == 4, reads
+    assert h[2]["timestamp"] < mtime - 500
+    assert h[3]["timestamp"] == pytest.approx(mtime, abs=1.0)
+    fresh = _table(spark, tmp_path)
+    assert fresh.version_at(mtime - 500) == 2
+    assert fresh.version_at(mtime + 1) == 3
+
+
 def test_idempotent_txn_skips_replayed_batch(spark, tmp_path):
     t = _table(spark, tmp_path)
     b0 = spark.createDataFrame([(1, 1, "a")], "k long, seq long, v string")

@@ -17,7 +17,7 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from data_pipeline_kafka_ek_spark.session import get_spark
 from data_pipeline_kafka_ek_spark.sources.tables import TABLES

@@ -11,9 +11,11 @@ Run:  python tools/gen_coverage.py   (rewrites COVERAGE.md)
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from data_pipeline_kafka_ek_spark.plans import catalog, extensions  # noqa: F401
 from data_pipeline_kafka_ek_spark.plans.catalog import QUERIES
@@ -177,7 +179,7 @@ def main() -> None:
         f"{len(QUERIES)} catalog queries overall."
     )
     lines.append("")
-    with open("/root/repo/COVERAGE.md", "w") as f:
+    with open(os.path.join(REPO, "COVERAGE.md"), "w") as f:
         f.write("\n".join(lines))
     gaps = [
         sid
@@ -205,7 +207,7 @@ def main() -> None:
             f"{'✓' if spec.bench else ''} | {doc} |"
         )
     qlines += ["", f"{len(QUERIES)} queries, all oracle-checked.", ""]
-    with open("/root/repo/QUERIES.md", "w") as f:
+    with open(os.path.join(REPO, "QUERIES.md"), "w") as f:
         f.write("\n".join(qlines))
     print(f"wrote QUERIES.md: {len(QUERIES)} entries")
 
