@@ -26,60 +26,7 @@ from data_pipeline_kafka_ek_spark.plans import extensions  # noqa: F401  (regist
 from data_pipeline_kafka_ek_spark.plans.catalog import bench_queries
 from data_pipeline_kafka_ek_spark.session import get_spark
 from data_pipeline_kafka_ek_spark.sources.tables import TABLES, load_table
-
-# Canary-correction family per query, by EXPLICIT name (r15 ADVICE: a
-# substring heuristic like "'acid' in name" silently misclassifies
-# future registrations — t_streaming_dml_replica is an ACID feed twin
-# whose cost is commit-protocol scratch-fs latency despite its name).
-# Everything not listed here is corrected by the pure-CPU canary;
-# tools/bench_compare.py reads this from the emitted JSON
-# ("canary_families") and only falls back to its own pinned list for
-# pre-r16 bench files.
-IO_BOUND_QUERIES = frozenset({
-    "t_streaming_acid_changes",
-    "x_acid_incremental_mv",
-    "t_streaming_dml_replica",
-    "x_acid_dml_lifecycle",
-    "x_acid_merge_sql",
-    "x_acid_replica_convergence",
-    "x_acid_restore_rewind",
-    "x_acid_sized_compaction",
-    "x_acid_stats_skipping",
-    "x_acid_time_travel_diff",
-})
-
-# Named A/B families for --families (r15 verdict #8): re-run ONLY a
-# disputed family without the ~60-commit ACID replay dominating wall
-# time. Every benched query must belong to exactly one family
-# (tests/test_tools.py pins the partition against bench_queries()).
-QUERY_FAMILIES: dict[str, frozenset[str]] = {
-    "core": frozenset({
-        "j1_enrichment_join", "unhappy_vip_customers",
-        "a2_a3_windowed_collect", "t4_session_5m_counts",
-    }),
-    "tpch": frozenset({
-        "h1_pricing_summary", "h2_min_acctbal_supplier",
-        "h3_top_revenue_orders", "h4_late_shipment_priority",
-        "h5_nation_revenue", "h7_volume_shipping",
-        "h10_returned_item_revenue", "h14_promo_revenue_share",
-        "h16_supplier_part_breadth", "h18_large_volume_customers",
-        "h21_waiting_supplier", "h22_dormant_customers",
-        "h_window_cumulative_revenue",
-    }),
-    "dedup": frozenset({
-        "x_dedup_exact", "x_dedup_jaccard", "x_dedup_minhash_lsh",
-        "x_dedup_simhash", "x_dedup_embedding_lsh",
-    }),
-    "ann": frozenset({"x_ann_topk_blocked"}),
-    "acid": frozenset({"t_streaming_acid_changes", "x_acid_incremental_mv"}),
-    "sketch": frozenset({"x_sketch_kmv_setops", "x_sketch_kmv_rollup"}),
-    "curation": frozenset({
-        "x_text_quality", "x_quality_gopher_rules",
-        "x_text_bigram_logprob", "x_window_sliding_stats",
-        "x_multimodal_pixel_stats", "x_quality_threshold_sweep",
-        "x_events_key_skew_profile", "x_pipeline_domain_quota",
-    }),
-}
+from tools.query_families import IO_BOUND_QUERIES, QUERY_FAMILIES
 
 
 def query_family(name: str) -> "str | None":
@@ -271,79 +218,12 @@ def main() -> None:
     canary_io_sec = round(statistics.median(canary_io_samples), 4)
     canary_io_bulk_mbps = round(statistics.median(canary_io_bulk_samples), 1)
 
-    # r4 widened the headline set with the two candidate-verify dedup plans
-    # (x_dedup_jaccard, x_dedup_minhash_lsh) — report the prior cohort's
-    # subtotal alongside so round-over-round totals stay comparable (the
-    # total jump is added coverage, not regression; bench_compare still
-    # gates per query)
-    added_r04 = {"x_dedup_jaccard", "x_dedup_minhash_lsh"}
-    # r6 widened it again with three single-scan curation/analytics queries,
-    # then with the Q4/Q10/Q14-shaped scale proofs late in the round
-    added_r06 = {
-        "x_quality_gopher_rules",
-        "x_text_bigram_logprob",
-        "x_window_sliding_stats",
-        "h4_late_shipment_priority",
-        "h10_returned_item_revenue",
-        "h14_promo_revenue_share",
-        "x_multimodal_pixel_stats",
-    }
-    # r7: the calibration/profiling additions + the Q16-shaped proof
-    added_r07 = {
-        "x_quality_threshold_sweep",
-        "x_events_key_skew_profile",
-        "h16_supplier_part_breadth",
-    }
-    added_r08 = {
-        "h18_large_volume_customers",
-        "h21_waiting_supplier",
-    }
-    # r9: the ACID feed twins (the first benched queries that WRITE scratch
-    # tables — their trend measures the transactional feed path, not just
-    # reads) + the two KMV sketch compositions
-    added_r09 = {
-        "t_streaming_acid_changes",
-        "x_acid_incremental_mv",
-        "x_sketch_kmv_setops",
-        "x_sketch_kmv_rollup",
-    }
-    # r13: the new TPC-H plan families (Q7 one-fact-shuffle, Q2 window
-    # decorrelation, Q22 anti join) + the two-phase domain quota
-    added_r13 = {
-        "h7_volume_shipping",
-        "h2_min_acctbal_supplier",
-        "h22_dormant_customers",
-        "x_pipeline_domain_quota",
-    }
     load_end = os.getloadavg()
+    # per-family subtotals (the QUERY_FAMILIES partition): each fact lives
+    # in one place, so adding a query moves exactly one family's sum
     subtotals = {
-        "r03_comparable_set": round(
-            sum(
-                v
-                for k, v in timings.items()
-                if k not in added_r04 | added_r06 | added_r07
-                | added_r08 | added_r09 | added_r13
-            ),
-            3,
-        ),
-        "added_in_r04": round(
-            sum(v for k, v in timings.items() if k in added_r04), 3
-        ),
-        "added_in_r06": round(
-            sum(v for k, v in timings.items() if k in added_r06), 3
-        ),
-        "added_in_r07": round(
-            sum(v for k, v in timings.items() if k in added_r07), 3
-        ),
-        "added_in_r08": round(
-            sum(v for k, v in timings.items() if k in added_r08), 3
-        ),
-        "added_in_r09": round(
-            sum(v for k, v in timings.items() if k in added_r09), 3
-        ),
-        "added_in_r13": round(
-            sum(v for k, v in timings.items() if k in added_r13), 3
-        ),
+        fam: round(sum(v for k, v in timings.items() if k in names), 3)
+        for fam, names in QUERY_FAMILIES.items()
     }
     norm = 0.33 / canary_sec
     print(

@@ -800,7 +800,9 @@ class Engine:
             # values map to the recorded schema in order. Each value is
             # cast to the recorded column type so VALUES literals (int
             # vs long, NULL) never trip the append type-conflict guard.
-            sch = t._latest_schema()
+            from data_pipeline_kafka_ek_spark.sources.acid import _schema_of
+
+            sch = _schema_of(t._fold_log()["schema"])
             if m.group(3):
                 names = [
                     c.strip().strip("`").replace("``", "`")
@@ -1105,7 +1107,9 @@ class Engine:
         src = self.spark.sql(
             self._rewrite_time_travel(f"SELECT * FROM {body}")
         )
-        sch = t._latest_schema()
+        from data_pipeline_kafka_ek_spark.sources.acid import _schema_of
+
+        sch = _schema_of(t._fold_log()["schema"])
         recorded_lower: "dict[str, str]" = {}
         if sch is not None:
             # source columns the table knows are cast to the recorded
@@ -1334,7 +1338,7 @@ class Engine:
         # CONSTRAINT before the first write) has versions but no recorded
         # schema — there is no shape to register yet; the first DML
         # through sql() re-pins the view once one exists
-        if t.latest_version() >= 0 and t._latest_schema() is not None:
+        if t._fold_log()["schema"] is not None:
             self.create_table(name, t.read())
         return t
 

@@ -5557,7 +5557,7 @@ def t_streaming_cms(spark, sf_dir):
     FROM clf_raw c CROSS JOIN grid g
     GROUP BY g.threshold
     """,
-    bench=True,  # r7 headline addition (added_in_r07 subtotal)
+    bench=True,  # r7 headline addition
     survey_ids=("EXT-text", "EXT-pipeline", "A1"),
     doc="classifier-threshold calibration curve: keep rate of the hashed "
     "quality classifier at each of five candidate thresholds — the sweep "
@@ -5659,7 +5659,7 @@ def x_corpus_length_histogram(spark, sf_dir):
     FROM ranked
     GROUP BY grp
     """,
-    bench=True,  # r7 headline addition (added_in_r07 subtotal)
+    bench=True,  # r7 headline addition
     survey_ids=("EXT-pipeline", "A1", "A7"),
     doc="join/agg-key skew diagnostics per stream: distinct-key count and "
     "the row share of the hottest 1 and 10 keys, plus the salt flag the "
@@ -5703,7 +5703,7 @@ def x_events_key_skew_profile(spark, sf_dir):
     ORDER BY supplier_cnt DESC, p.p_brand, p.p_type, p.p_size
     LIMIT 20
     """,
-    bench=True,  # r7 headline addition (added_in_r07 subtotal)
+    bench=True,  # r7 headline addition
     survey_ids=("A1", "J1", "L4"),
     doc="TPC-H Q16-shaped supplier-breadth report: distinct suppliers per "
     "(brand, type, size) after excluding a blocklisted supplier set — "
@@ -5906,7 +5906,7 @@ def x_events_heavy_hitters(spark, sf_dir):
     ORDER BY b.total_qty DESC, o.o_orderkey
     LIMIT 20
     """,
-    bench=True,  # r8 headline addition (added_in_r08 subtotal)
+    bench=True,  # r8 headline addition
     survey_ids=("A1", "J1", "L4"),
     doc="TPC-H Q18-shaped large-volume-customer report: aggregate the "
     "fact, HAVING-filter to the rare heavy orders, then join the "
@@ -5987,7 +5987,7 @@ def h18_large_volume(spark, sf_dir, broadcast_limit=5_000_000):
     ORDER BY numwait DESC, s.s_name
     LIMIT 10
     """,
-    bench=True,  # r8 headline addition (added_in_r08 subtotal)
+    bench=True,  # r8 headline addition
     survey_ids=("A1", "J1", "F5", "L4"),
     doc="TPC-H Q21-shaped waiting-supplier report (l_shipdate 30+ days "
     "past order date stands in for the receipt-commit lateness; the "
@@ -6205,10 +6205,10 @@ def x_acid_sized_compaction(spark, sf_dir):
         t.append(p.filter(F.col("event_id") % 10 < 8))
         for b in (8, 9):
             t.append(p.filter(F.col("event_id") % 10 == b))
-        bulk = max(t._snapshot_adds(), key=lambda a: a["bytes"])
+        bulk = max(t._fold_log()["adds"].values(), key=lambda a: a["bytes"])
         t.set_property("optimize.target_file_bytes", str(bulk["bytes"]))
         v = eng.sql("OPTIMIZE szc_t").first().version
-        live = {a["path"] for a in t._snapshot_adds()}
+        live = set(t._fold_log()["adds"])
         assert v is not None and bulk["path"] in live, (
             "bounded compaction must rewrite only the small-file debt"
         )

@@ -66,9 +66,11 @@ topics + ksqlDB internal state; this module is the lake-side twin.
 
 from __future__ import annotations
 
+import functools
 import json
 import time
 import uuid
+from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StringType, StructField, StructType
@@ -229,6 +231,41 @@ def _replayed(state: dict, txn: "dict | None") -> bool:
     return txn is not None and int(txn["batch_id"]) <= int(
         state["txns"].get(txn["app_id"], -1)
     )
+
+
+def _fold_step(state: dict, version: int, commit: dict) -> None:
+    """Apply commit ``version``'s body to the fold ``state`` in place —
+    the one per-commit rule every fold shares: :meth:`TxnLogTable._fold_log`
+    replays the tail after its checkpoint with it, and ``vacuum`` carries
+    a fold forward into its retained window with it."""
+    for action in commit["actions"]:
+        if "add" in action:
+            state["adds"][action["add"]["path"]] = action["add"]
+        elif "remove" in action:
+            state["adds"].pop(action["remove"]["path"], None)
+        elif "constraint_add" in action:
+            c = action["constraint_add"]
+            state["constraints"][c["name"]] = c["expr"]
+        elif "constraint_drop" in action:
+            state["constraints"].pop(action["constraint_drop"]["name"], None)
+        elif "property_set" in action:
+            p = action["property_set"]
+            state["properties"][p["key"]] = p["value"]
+        elif "property_unset" in action:
+            state["properties"].pop(action["property_unset"]["key"], None)
+    txn = commit.get("txn")
+    if txn:
+        app = txn["app_id"]
+        state["txns"][app] = max(int(txn["batch_id"]), state["txns"].get(app, -1))
+    if commit.get("schema") is not None:
+        state["schema"] = commit["schema"]
+    state["version"] = version
+
+
+def _schema_of(schema_json: "str | None") -> "StructType | None":
+    """A recorded schema JSON (a fold's ``schema``) as a StructType;
+    None for a table that never recorded one."""
+    return StructType.fromJson(json.loads(schema_json)) if schema_json else None
 
 
 def _canon(p: str) -> str:
@@ -731,10 +768,28 @@ class TxnLogTable:
 
     # -- Hadoop FS plumbing (works on file:/, HDFS) -------------------------
 
+    @functools.cached_property
+    def _jvm(self) -> SimpleNamespace:
+        """The JVM classes and the FileSystem the log plumbing calls,
+        resolved ONCE per table: every dotted ``spark._jvm`` step is a
+        py4j reflection round trip, so resolving them per call made a
+        commit-body read cost ~17 round trips instead of ~6."""
+        jvm = self.spark._jvm
+        path_cls = jvm.org.apache.hadoop.fs.Path
+        return SimpleNamespace(
+            Path=path_cls,
+            fs=path_cls(self.path).getFileSystem(
+                self.spark._jsc.hadoopConfiguration()
+            ),
+            IOUtils=jvm.org.apache.commons.io.IOUtils,
+            FileUtil=jvm.org.apache.hadoop.fs.FileUtil,
+            ArrayUtils=jvm.org.apache.commons.lang3.ArrayUtils,
+        )
+
     def _fs(self, p: str):
-        jpath = self.spark._jvm.org.apache.hadoop.fs.Path(p)
-        fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return fs, jpath
+        """(FileSystem, Hadoop Path) for ``p`` — every path the table
+        touches lives under its root, so one FileSystem serves all."""
+        return self._jvm.fs, self._jvm.Path(p)
 
     def _write_text_atomic(self, dest: str, body: str) -> bool:
         """Publish ``body`` at ``dest`` with put-if-absent semantics;
@@ -798,9 +853,7 @@ class TxnLogTable:
         fs, jpath = self._fs(p)
         stream = fs.open(jpath)
         try:
-            return self.spark._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
+            return self._jvm.IOUtils.toString(stream, "UTF-8")
         finally:
             stream.close()
 
@@ -820,9 +873,8 @@ class TxnLogTable:
         # with the table's age. Log names start with a digit; temp files
         # (".tmp-*") and the fragments a comma inside the directory path
         # splits off do not.
-        jvm = self.spark._jvm
-        joined = jvm.org.apache.commons.lang3.ArrayUtils.toString(
-            jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(fs.listStatus(jpath))
+        joined = self._jvm.ArrayUtils.toString(
+            self._jvm.FileUtil.stat2Paths(fs.listStatus(jpath))
         )
         commits, ckpts = [], []
         for p in joined[1:-1].split(","):
@@ -873,7 +925,11 @@ class TxnLogTable:
                     return cv, body
         return None
 
-    def _fold_log(self, version: "int | None" = None) -> dict:
+    def _fold_log(
+        self,
+        version: "int | None" = None,
+        listing: "tuple[list[int], list[int]] | None" = None,
+    ) -> dict:
         """ONE log listing + ONE checkpoint read + ONE tail pass producing
         the complete table state at ``version`` (default: latest): live
         adds, per-app txn high-water marks, the recorded schema JSON,
@@ -887,62 +943,37 @@ class TxnLogTable:
         replays the same tail twice. The log is dense (see
         ``_write_text_atomic``), so a checkpoint at ``c`` covers exactly
         the commits ``0..c`` and the tail replay ``c+1..version`` misses
-        nothing."""
-        versions, ckpts = self._log_listing()
+        nothing. ``listing`` is a :meth:`_log_listing` already in hand
+        (an op that needs the head before it knows which version to
+        fold)."""
+        versions, ckpts = listing or self._log_listing()
         if version is None:
             version = versions[-1] if versions else -1
-        live: dict[str, dict] = {}
-        txns: dict[str, int] = {}
-        schema: "str | None" = None
-        constraints: dict[str, str] = {}
-        properties: dict[str, str] = {}
-        start = 0
-        ckpt = self._base_checkpoint(version, ckpts)
-        if ckpt is not None:
-            start = ckpt[0] + 1
-            live = {a["path"]: a for a in ckpt[1]["adds"]}
-            txns = {k: int(v) for k, v in ckpt[1].get("txns", {}).items()}
-            schema = ckpt[1].get("schema")
-            constraints = dict(ckpt[1].get("constraints", {}))
-            properties = dict(ckpt[1].get("properties", {}))
-        for v in versions:
-            if v < start or v > version:
-                continue
-            commit = self._read_commit(v)
-            for action in commit["actions"]:
-                if "add" in action:
-                    live[action["add"]["path"]] = action["add"]
-                elif "remove" in action:
-                    live.pop(action["remove"]["path"], None)
-                elif "constraint_add" in action:
-                    c = action["constraint_add"]
-                    constraints[c["name"]] = c["expr"]
-                elif "constraint_drop" in action:
-                    constraints.pop(action["constraint_drop"]["name"], None)
-                elif "property_set" in action:
-                    p = action["property_set"]
-                    properties[p["key"]] = p["value"]
-                elif "property_unset" in action:
-                    properties.pop(action["property_unset"]["key"], None)
-            txn = commit.get("txn")
-            if txn:
-                app = txn["app_id"]
-                txns[app] = max(int(txn["batch_id"]), txns.get(app, -1))
-            if commit.get("schema") is not None:
-                schema = commit["schema"]
-        return {
-            "adds": live,
-            "txns": txns,
-            "schema": schema,
-            "constraints": constraints,
-            "properties": properties,
-            "version": version,
+        state = {
+            "adds": {},
+            "txns": {},
+            "schema": None,
+            "constraints": {},
+            "properties": {},
+            "version": -1,
             "versions": versions,
         }
-
-    def _snapshot_adds(self, version: "int | None" = None) -> "list[dict]":
-        """Live add actions at ``version`` (default: latest)."""
-        return list(self._fold_log(version)["adds"].values())
+        ckpt = self._base_checkpoint(version, ckpts)
+        if ckpt is not None:
+            cv, body = ckpt
+            state.update(
+                adds={a["path"]: a for a in body["adds"]},
+                txns={k: int(v) for k, v in body.get("txns", {}).items()},
+                schema=body.get("schema"),
+                constraints=dict(body.get("constraints", {})),
+                properties=dict(body.get("properties", {})),
+                version=cv,
+            )
+        for v in versions:
+            if state["version"] < v <= version:
+                _fold_step(state, v, self._read_commit(v))
+        state["version"] = version
+        return state
 
     def _commit_times(
         self, versions: "list[int]", body
@@ -1029,8 +1060,6 @@ class TxnLogTable:
         """Commit metadata, oldest first — op, version, txn, file deltas,
         publish timestamp (monotone, epoch seconds). One listing; each
         commit body is read at most once."""
-        import functools
-
         versions = self._list_versions()
         body = functools.cache(self._read_commit)
         times = dict(self._commit_times(versions, body))
@@ -1061,12 +1090,6 @@ class TxnLogTable:
         """Has ``(app_id, batch_id)`` (or a later batch of the same app)
         already committed? The exactly-once guard for replayed batches."""
         return batch_id <= self.txn_high_water(app_id)
-
-    def _latest_schema(self, version: "int | None" = None) -> "StructType | None":
-        """Schema recorded at or before ``version`` (checkpoint + tail),
-        or None for a never-written table."""
-        found = self._fold_log(version)["schema"]
-        return StructType.fromJson(json.loads(found)) if found else None
 
     # -- data-file writing --------------------------------------------------
 
@@ -1878,11 +1901,7 @@ class TxnLogTable:
                     state["schema"],
                 )
                 checked.update(fresh_c)
-            base_schema = (
-                StructType.fromJson(json.loads(state["schema"]))
-                if state["schema"]
-                else None
-            )
+            base_schema = _schema_of(state["schema"])
             touched = [a for a in state["adds"].values() if _overlaps(a)]
             # zero-job key-distribution model for the data write's range
             # boundaries: every touched file's recorded non-null key span
@@ -2064,11 +2083,7 @@ class TxnLogTable:
                 live = [a for a in live if _stats_may_match(a, prune)]
             if not live:
                 return no_match()
-            sch = (
-                StructType.fromJson(json.loads(state["schema"]))
-                if state["schema"]
-                else None
-            )
+            sch = _schema_of(state["schema"])
             if assignments is not None:
                 cols = (
                     [f.name for f in sch.fields]
@@ -2458,11 +2473,7 @@ class TxnLogTable:
             # recorded schema pins the compaction read — same evolution
             # hazard as merge: a mixed narrow/wide live set read via footer
             # inference would rewrite (and record) the narrow schema
-            sch = (
-                StructType.fromJson(json.loads(state["schema"]))
-                if state["schema"]
-                else None
-            )
+            sch = _schema_of(state["schema"])
             reader = self.spark.read.schema(sch) if sch is not None else self.spark.read
             df = reader.parquet(*[a["path"] for a in rewrite])
             # the recorded schema must never include __zorder_* scaffolding
@@ -2715,11 +2726,7 @@ class TxnLogTable:
         — per-version fidelity without mergeSchema footers. A snapshot
         with no live files reads as an empty DataFrame of that schema."""
         adds = list(state["adds"].values())
-        schema = (
-            StructType.fromJson(json.loads(state["schema"]))
-            if state["schema"]
-            else None
-        )
+        schema = _schema_of(state["schema"])
         if not adds:
             if schema is None:
                 raise ValueError(
@@ -2734,7 +2741,7 @@ class TxnLogTable:
         return reader.parquet(*[a["path"] for a in adds])
 
     def file_count(self, version: "int | None" = None) -> int:
-        return len(self._snapshot_adds(version))
+        return len(self._fold_log(version)["adds"])
 
     def prune_files(
         self, conjuncts: "list[tuple]", version: "int | None" = None
@@ -2762,12 +2769,18 @@ class TxnLogTable:
         entire point of OPTIMIZE ZORDER BY: after clustering, every
         listed dimension's per-file ranges are tight, so this prune
         drops most files for predicates on ANY of them."""
+        return list(self._pruned(self._fold_log(version), conjuncts).values())
+
+    @staticmethod
+    def _pruned(state: dict, conjuncts: "list[tuple]") -> "dict[str, dict]":
+        """The live adds of the fold ``state`` that :meth:`prune_files`
+        keeps, keyed like ``state["adds"]``."""
         _validate_conjuncts(conjuncts)
-        return [
-            a
-            for a in self._snapshot_adds(version)
+        return {
+            p: a
+            for p, a in state["adds"].items()
             if _stats_may_match(a, conjuncts)
-        ]
+        }
 
     def read_pruned(
         self, conjuncts: "list[tuple]", version: "int | None" = None
@@ -2778,31 +2791,18 @@ class TxnLogTable:
         files still hold non-matching rows). Result rows are EXACTLY
         ``read(version).filter(<conjuncts>)`` — the prune is a pure
         optimization, asserted by tests."""
-        adds = self.prune_files(conjuncts, version)
-        schema = self._latest_schema(version)
-
-        def _filter(df: DataFrame) -> DataFrame:
-            for col, op, val in conjuncts:
-                c = F.col(col)
-                if op == "between":
-                    df = df.filter(c.between(val[0], val[1]))
-                else:
-                    df = df.filter(
-                        {"=": c == val, "<": c < val, "<=": c <= val,
-                         ">": c > val, ">=": c >= val}[op]
-                    )
-            return df
-
-        if not adds:
-            if schema is None:
-                raise ValueError("table has no commits")
-            return _filter(self.spark.createDataFrame([], schema))
-        reader = (
-            self.spark.read.schema(schema)
-            if schema is not None
-            else self.spark.read
-        )
-        return _filter(reader.parquet(*[a["path"] for a in adds]))
+        state = self._fold_log(version)
+        df = self._scan({**state, "adds": self._pruned(state, conjuncts)})
+        for col, op, val in conjuncts:
+            c = F.col(col)
+            if op == "between":
+                df = df.filter(c.between(val[0], val[1]))
+            else:
+                df = df.filter(
+                    {"=": c == val, "<": c < val, "<=": c <= val,
+                     ">": c > val, ">=": c >= val}[op]
+                )
+        return df
 
     def read_changes(self, since_version: int = -1) -> DataFrame:
         """The commit log as an incremental feed — the table-side half of
@@ -2832,49 +2832,32 @@ class TxnLogTable:
         broadcast path->version map joined on ``input_file_name()`` —
         a full-history replay over thousands of commits stays a
         handful of scan nodes."""
-        state = self._fold_log(since_version)
-        if since_version < max(state["versions"], default=-1):
-            wm = self._vacuum_watermark()
-            if since_version + 1 < wm:
-                raise ValueError(
-                    f"changes since {since_version} include vacuumed "
-                    f"versions (earliest retained: {wm})"
-                )
-        # post-image feed: removed files never replay
-        groups, schema_json = self._feed_groups(
-            state, skip_optimize=False, kinds=("cdc", "add")
+        return self._changes_frame(
+            self._feed_walk(since_version, skip_optimize=False, kinds=("cdc", "add"))
         )
-        if not groups:
-            return self._empty_changes(schema_json)
 
-        def _post_images(kind, scan):
-            if kind == "cdc":
-                return scan.filter(
-                    F.col("_change_type").isin("insert", "update_postimage")
-                ).drop("_change_type")
-            return scan
-
-        return self._assemble_feed(groups, with_op=True, transform=_post_images)
-
-    def _feed_groups(
+    def _feed_walk(
         self,
-        state: dict,
+        since_version: int,
         skip_optimize: bool,
         require_row_level: bool = False,
         kinds: "tuple[str, ...]" = ("cdc", "add", "remove"),
-    ) -> "tuple[dict[tuple, list], str | None]":
-        """ONE commit-tail walk shared by every feed over the commits
-        after the fold ``state`` (the feed's cursor), up to the head of
-        the listing that fold was built from: the skip rules, the
-        incremental schema-epoch tracking, and the cdc-vs-add-vs-remove
-        grouping. Returns ``({(kind, schema_json): [(path, version, op),
-        ...]}, head schema_json)`` with kind in {'cdc', 'add', 'remove'}
-        — callers pick the kinds their semantics need.
-        ``require_row_level`` raises on a merge commit without change
-        files (read_row_changes' fidelity contract). Each commit file is
-        read exactly once; the schema is tracked incrementally (a
-        per-commit _latest_schema would re-fold the log O(tail)
-        times)."""
+        listing: "tuple[list[int], list[int]] | None" = None,
+    ) -> SimpleNamespace:
+        """The ONE log walk behind every change feed: one fold at the
+        cursor ``since_version`` (from ``listing`` when the caller already
+        listed), then one pass over the commits after it up to the head
+        of that fold's listing — the skip rules, the incremental
+        schema-epoch tracking, and the cdc-vs-add-vs-remove grouping.
+        Returns ``since``, ``state`` (the fold: its ``versions`` are the
+        listing the span was cut from, so a caller needing the span's
+        versions or head takes them from here), ``groups`` (``{(kind,
+        schema_json): [(path, version, op), ...]}`` with kind in
+        ``kinds``; empty when the span carries no rows to replay) and
+        ``schema`` (the head's schema JSON). ``require_row_level`` raises
+        on a merge commit without change files (read_row_changes'
+        fidelity contract). Each commit body is read exactly once."""
+        state = self._fold_log(since_version, listing)
         schema_json = state["schema"]
         groups: "dict[tuple, list]" = {}
         for v in state["versions"]:
@@ -2908,15 +2891,45 @@ class TxnLogTable:
                     "cannot be reconstructed — replay it via "
                     "read_changes/read_deltas instead"
                 )
-            if adds and "add" in kinds:
-                groups.setdefault(("add", schema_json), []).extend(
-                    (p, v, c["op"]) for p in adds
-                )
-            if removed and "remove" in kinds:
-                groups.setdefault(("remove", schema_json), []).extend(
-                    (p, v, c["op"]) for p in removed
-                )
-        return groups, schema_json
+            for kind, paths in (("add", adds), ("remove", removed)):
+                if paths and kind in kinds:
+                    groups.setdefault((kind, schema_json), []).extend(
+                        (p, v, c["op"]) for p in paths
+                    )
+        return SimpleNamespace(
+            since=since_version, state=state, groups=groups, schema=schema_json
+        )
+
+    def _span_watermark(self, walk: SimpleNamespace) -> int:
+        """The vacuum watermark a feed bounds ``walk``'s cursor by; 0
+        (never vacuumed) for a caught-up walk, whose empty span needs no
+        reclaimed version."""
+        if walk.since < max(walk.state["versions"], default=-1):
+            return self._vacuum_watermark()
+        return 0
+
+    def _changes_frame(self, walk: SimpleNamespace) -> DataFrame:
+        """:meth:`read_changes` over a :meth:`_feed_walk`."""
+        wm = self._span_watermark(walk)
+        if walk.since + 1 < wm:
+            raise ValueError(
+                f"changes since {walk.since} include vacuumed versions "
+                f"(earliest retained: {wm})"
+            )
+        if not walk.groups:
+            return self._empty_changes(walk.schema)
+
+        # post-image feed: removed files never replay
+        def _post_images(kind, scan):
+            if kind == "cdc":
+                return scan.filter(
+                    F.col("_change_type").isin("insert", "update_postimage")
+                ).drop("_change_type")
+            return scan
+
+        return self._assemble_feed(
+            walk.groups, with_op=True, transform=_post_images
+        )
 
     def _empty_changes(self, schema_json: "str | None") -> DataFrame:
         """:meth:`read_changes`' typed empty frame: the head's recorded
@@ -2964,11 +2977,7 @@ class TxnLogTable:
         plans O(schema epochs) instead of O(commits). ``kind='cdc'``
         widens the recorded schema with the ``_change_type`` tag the
         change files carry."""
-        sch = (
-            StructType.fromJson(json.loads(schema_json))
-            if schema_json is not None
-            else None
-        )
+        sch = _schema_of(schema_json)
         if kind == "cdc" and sch is not None:
             sch = StructType(
                 list(sch.fields) + [StructField("_change_type", StringType())]
@@ -3036,22 +3045,25 @@ class TxnLogTable:
         commit's row-level deletes are unrecoverable, and silently
         degrading to whole-file post-images would corrupt a replica.
         Same O(schema epochs) plan bound as ``read_changes``."""
-        state = self._fold_log(since_version)
-        if since_version < max(state["versions"], default=-1):
-            wm = self._vacuum_watermark()
-            if since_version + 1 < wm:
-                raise ValueError(
-                    f"row changes since {since_version} include vacuumed "
-                    f"versions (earliest retained: {wm})"
-                )
-        groups, schema_json = self._feed_groups(
-            state,
-            skip_optimize=True,
-            require_row_level=True,
-            kinds=("cdc", "add"),
+        return self._row_changes_frame(
+            self._feed_walk(
+                since_version,
+                skip_optimize=True,
+                require_row_level=True,
+                kinds=("cdc", "add"),
+            )
         )
-        if not groups:
-            empty = self._empty_changes(schema_json).drop("_commit_op")
+
+    def _row_changes_frame(self, walk: SimpleNamespace) -> DataFrame:
+        """:meth:`read_row_changes` over a :meth:`_feed_walk`."""
+        wm = self._span_watermark(walk)
+        if walk.since + 1 < wm:
+            raise ValueError(
+                f"row changes since {walk.since} include vacuumed versions "
+                f"(earliest retained: {wm})"
+            )
+        if not walk.groups:
+            empty = self._empty_changes(walk.schema).drop("_commit_op")
             return empty.withColumn("_change_type", F.lit(None).cast("string"))
 
         def _typed(kind, scan):
@@ -3059,13 +3071,11 @@ class TxnLogTable:
                 return scan.withColumn("_change_type", F.lit("insert"))
             return scan
 
-        out = self._assemble_feed(groups, with_op=False, transform=_typed)
+        out = self._assemble_feed(walk.groups, with_op=False, transform=_typed)
         # stable column order regardless of which kind led the union:
         # data columns first, then the two feed metadata columns
         meta = ["_commit_version", "_change_type"]
-        return out.select(
-            *[c for c in out.columns if c not in meta], *meta
-        )
+        return out.select(*[c for c in out.columns if c not in meta], *meta)
 
     def stream_changes(
         self, since_version: int = -1, commits_per_batch: int = 1
@@ -3098,10 +3108,12 @@ class TxnLogTable:
         preserved, and the batching is the same on every run."""
         from data_pipeline_kafka_ek_spark.streaming import runtime as _rt
 
-        feed = self.read_changes(since_version)
-        versions = [v for v in self._list_versions() if v > since_version]
+        walk = self._feed_walk(
+            since_version, skip_optimize=False, kinds=("cdc", "add")
+        )
+        versions = [v for v in walk.state["versions"] if v > since_version]
         return _rt.commit_span_stream(
-            self.spark, feed, versions, commits_per_batch
+            self.spark, self._changes_frame(walk), versions, commits_per_batch
         )
 
     def read_deltas(self, since_version: int = -1) -> DataFrame:
@@ -3129,23 +3141,22 @@ class TxnLogTable:
         files were live only BEFORE it, so replaying deltas needs
         ``since_version >= watermark`` (the removed files of commit
         ``wm`` itself may already be reclaimed)."""
-        state = self._fold_log(since_version)
-        if since_version < max(state["versions"], default=-1):
-            wm = self._vacuum_watermark()
-            # commit c's REMOVED files were live only at c-1; after a
-            # vacuum to watermark wm, the first commit whose pre-image is
-            # guaranteed on disk is wm+1 — so the earliest safe cursor is
-            # wm (wm == 0 means never vacuumed: every image exists and
-            # cursor -1 is fine)
-            if wm > 0 and since_version < wm:
-                raise ValueError(
-                    f"deltas since {since_version} need pre-{wm} file "
-                    f"images that vacuum may have reclaimed (earliest safe "
-                    f"cursor: {wm})"
-                )
-        groups, schema_json = self._feed_groups(state, skip_optimize=True)
-        if not groups:
-            empty = self._empty_changes(schema_json).drop("_commit_op")
+        return self._deltas_frame(self._feed_walk(since_version, skip_optimize=True))
+
+    def _deltas_frame(self, walk: SimpleNamespace) -> DataFrame:
+        """:meth:`read_deltas` over a :meth:`_feed_walk`."""
+        wm = self._span_watermark(walk)
+        # commit c's REMOVED files were live only at c-1; after a vacuum
+        # to watermark wm, the first commit whose pre-image is guaranteed
+        # on disk is wm+1 — so the earliest safe cursor is wm (wm == 0
+        # means never vacuumed: every image exists and cursor -1 is fine)
+        if wm > 0 and walk.since < wm:
+            raise ValueError(
+                f"deltas since {walk.since} need pre-{wm} file images that "
+                f"vacuum may have reclaimed (earliest safe cursor: {wm})"
+            )
+        if not walk.groups:
+            empty = self._empty_changes(walk.schema).drop("_commit_op")
             return empty.withColumn("_weight", F.lit(None).cast("int"))
 
         def _signed(kind, scan):
@@ -3165,7 +3176,7 @@ class TxnLogTable:
                 "_weight", F.lit(1 if kind == "add" else -1).cast("int")
             )
 
-        return self._assemble_feed(groups, with_op=False, transform=_signed)
+        return self._assemble_feed(walk.groups, with_op=False, transform=_signed)
 
     # -- maintenance --------------------------------------------------------
 
@@ -3174,19 +3185,36 @@ class TxnLogTable:
         Conservative: a file referenced by ANY commit in the log is kept,
         so time travel over the whole retained log keeps working. Exact
         canonical-path set membership — no suffix matching."""
-        referenced: set[str] = set()
-        for v in self._list_versions():
-            for action in self._read_commit(v)["actions"]:
-                if "add" in action:
-                    referenced.add(_canon(action["add"]["path"]))
-        fs, jdir = self._fs(f"{self.path}/files")
+        referenced = {
+            _canon(a["add"]["path"])
+            for v in self._list_versions()
+            for a in self._read_commit(v)["actions"]
+            if "add" in a
+        }
+        return self._unprotected_part_files("files", referenced)
+
+    def _unprotected_part_files(
+        self, kind: str, protected: "set[str]", cutoff_ms: "float | None" = None
+    ) -> "list[str]":
+        """The one sweep over a table's part files: canonical paths of
+        the ``part-*`` files under ``files/`` or ``changes/`` (``kind``)
+        that are not in ``protected`` and, given a ``cutoff_ms``, were
+        last modified at or before it."""
+        fs, jdir = self._fs(f"{self.path}/{kind}")
         out = []
         if fs.exists(jdir):
             it = fs.listFiles(jdir, True)
             while it.hasNext():
-                p = _canon_uri(it.next().getPath().toString())
-                name = p.rsplit("/", 1)[-1]
-                if name.startswith("part-") and p not in referenced:
+                st = it.next()
+                p = _canon_uri(st.getPath().toString())
+                if (
+                    p.rsplit("/", 1)[-1].startswith("part-")
+                    and p not in protected
+                    and (
+                        cutoff_ms is None
+                        or st.getModificationTime() <= cutoff_ms
+                    )
+                ):
                     out.append(p)
         return out
 
@@ -3239,27 +3267,15 @@ class TxnLogTable:
         before handing retention a real table."""
         import time as _time
 
-        latest = self.latest_version()
-        if latest < 0:
+        listing = self._log_listing()
+        if not listing[0]:
             return {
                 "data_files_deleted": 0,
                 "tmp_files_deleted": 0,
                 "change_files_deleted": 0,
             }
+        latest = listing[0][-1]
         wm = max(0, latest - retain_versions + 1)
-        protected: set[str] = set()
-        for v in range(wm, latest + 1):
-            for a in self._snapshot_adds(v):
-                protected.add(_canon(a["path"]))
-        age_cutoff_ms = (_time.time() - min_age_s) * 1000.0
-        # watermark FIRST, deletion second: a vacuum that dies in between
-        # leaves files missing only BELOW the advanced watermark, so reads
-        # still fail with the clean below-watermark ValueError instead of
-        # mid-scan FileNotFound (the ordering the watermark exists for).
-        # Marker write is temp + atomic replace (single writer per vacuum
-        # is the deployment contract; a torn marker degrades to 0, see
-        # _vacuum_watermark)
-        marker = f"{self.log_dir}/_vacuum_watermark"
         # monotonic clamp: a later vacuum with a LARGER retain_versions
         # computes a smaller wm; writing it verbatim would move the marker
         # backwards below versions whose files are already reclaimed, so
@@ -3268,6 +3284,36 @@ class TxnLogTable:
         # Deletion still uses the newly computed protected set (keeping
         # MORE files than the marker promises is safe).
         wm_marker = max(self._vacuum_watermark(), wm)
+        # ONE fold just below the window, carried through it once: the
+        # retained snapshots' union is the snapshot at wm plus every file
+        # a later retained commit adds (a file live at v > wm was live at
+        # wm or added in (wm, v]). The same bodies give the change-file
+        # sweep its protected set: row-level cdc files are replayable
+        # only for commits at/above the watermark (read_changes raises
+        # below it), so cdc files referenced only by sub-watermark commits
+        # — plus attempt directories orphaned by lost merge races, which
+        # no commit references at all — are reclaimed
+        state = self._fold_log(wm - 1, listing)
+        protected: set[str] = set()
+        cdc_protected: set[str] = set()
+        for v in range(wm, latest + 1):
+            commit = self._read_commit(v)
+            if v == wm:
+                _fold_step(state, v, commit)
+                protected.update(map(_canon, state["adds"]))
+            for a in commit["actions"]:
+                if "add" in a:
+                    protected.add(_canon(a["add"]["path"]))
+                elif "cdc" in a and v >= wm_marker:
+                    cdc_protected.add(_canon(a["cdc"]["path"]))
+        # watermark FIRST, deletion second: a vacuum that dies in between
+        # leaves files missing only BELOW the advanced watermark, so reads
+        # still fail with the clean below-watermark ValueError instead of
+        # mid-scan FileNotFound (the ordering the watermark exists for).
+        # Marker write is temp + atomic replace (single writer per vacuum
+        # is the deployment contract; a torn marker degrades to 0, see
+        # _vacuum_watermark)
+        marker = f"{self.log_dir}/_vacuum_watermark"
         body = json.dumps({"min_version": wm_marker})
         mfs, mpath = self._fs(marker)
         if dry_run:
@@ -3286,69 +3332,25 @@ class TxnLogTable:
                 out.write(bytearray(body.encode("utf-8")))
             finally:
                 out.close()
-        fs, jdir = self._fs(f"{self.path}/files")
-        deleted = 0
-        if fs.exists(jdir):
-            doomed = []
-            it = fs.listFiles(jdir, True)
-            while it.hasNext():
-                st = it.next()
-                p = _canon_uri(st.getPath().toString())
-                if (
-                    p.rsplit("/", 1)[-1].startswith("part-")
-                    and p not in protected
-                    and st.getModificationTime() <= age_cutoff_ms
-                ):
-                    doomed.append(p)
-            for p in doomed:
-                deleted += 1
-                if dry_run:
-                    continue
-                _, jp = self._fs(p)
-                fs.delete(jp, False)
-        # change-file sweep: row-level cdc files are replayable only for
-        # commits at/above the watermark (read_changes raises below it),
-        # so cdc files referenced only by sub-watermark commits — plus
-        # attempt directories orphaned by lost merge races, which no
-        # commit references at all — are reclaimed once past the same
-        # in-flight age guard as data files
-        cdc_protected: set[str] = set()
-        for v in self._list_versions():
-            if v >= wm_marker:
-                for a in self._read_commit(v)["actions"]:
-                    if "cdc" in a:
-                        cdc_protected.add(_canon(a["cdc"]["path"]))
-        change_deleted = 0
-        cfs, cdir = self._fs(f"{self.path}/changes")
-        if cfs.exists(cdir):
-            doomed_cdc = []
-            it = cfs.listFiles(cdir, True)
-            while it.hasNext():
-                st = it.next()
-                p = _canon_uri(st.getPath().toString())
-                if (
-                    p.rsplit("/", 1)[-1].startswith("part-")
-                    and p not in cdc_protected
-                    and st.getModificationTime() <= age_cutoff_ms
-                ):
-                    doomed_cdc.append(p)
-            for p in doomed_cdc:
-                change_deleted += 1
-                if dry_run:
-                    continue
-                _, jp = self._fs(p)
-                cfs.delete(jp, False)
-        tmp_deleted = 0
-        for p in self.orphaned_tmp_files(older_than_s=retain_tmp_s):
-            tmp_deleted += 1
-            if dry_run:
-                continue
-            tfs, jp = self._fs(p)
-            tfs.delete(jp, False)
+        # data and change files pass the same in-flight age guard
+        age_cutoff_ms = (_time.time() - min_age_s) * 1000.0
+        doomed = {
+            "files": self._unprotected_part_files(
+                "files", protected, age_cutoff_ms
+            ),
+            "changes": self._unprotected_part_files(
+                "changes", cdc_protected, age_cutoff_ms
+            ),
+            "tmp": self.orphaned_tmp_files(older_than_s=retain_tmp_s),
+        }
+        if not dry_run:
+            for p in (p for paths in doomed.values() for p in paths):
+                dfs, jp = self._fs(p)
+                dfs.delete(jp, False)
         return {
-            "data_files_deleted": deleted,
-            "tmp_files_deleted": tmp_deleted,
-            "change_files_deleted": change_deleted,
+            "data_files_deleted": len(doomed["files"]),
+            "tmp_files_deleted": len(doomed["tmp"]),
+            "change_files_deleted": len(doomed["changes"]),
         }
 
     def foreach_batch_writer(self, app_id: str, delete_col: "str | None" = None):

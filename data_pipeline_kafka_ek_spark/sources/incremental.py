@@ -79,23 +79,6 @@ class IncrementalAggregate:
     def _sum_alias(self, c: str) -> str:
         return f"sum_{c}"
 
-    def _span_has_deltas(self, cur: int, v_now: int) -> bool:
-        """Metadata-only emptiness probe for the span ``(cur, v_now]``:
-        replays the same skip rules ``read_deltas`` applies (optimize
-        commits net to zero; create/txn commits carry no actions) over
-        the commit JSONs alone — zero Spark jobs. A span is non-empty
-        exactly when some surviving commit has an add or remove action,
-        which is exactly when ``read_deltas`` would build a scan."""
-        for v in self.source._list_versions():
-            if v <= cur or v > v_now:
-                continue
-            c = self.source._read_commit(v)
-            if c["op"] == "optimize":
-                continue
-            if any("add" in a or "remove" in a for a in c["actions"]):
-                return True
-        return False
-
     def refresh(self, max_restarts: int = 3) -> "int | None":
         """Fold source commits ``(cursor, latest]`` into the aggregate.
         Returns the target version written, or None when already caught
@@ -118,21 +101,24 @@ class IncrementalAggregate:
         )
 
     def _refresh_once(self) -> "int | None":
-        v_now = self.source.latest_version()
         cur = self.cursor()
-        if v_now < 0 or cur >= v_now:
+        # ONE listing of the source log: a caught-up poll stops at it;
+        # otherwise the span (cursor, head] is walked from that listing
+        listing = self.source._log_listing()
+        v_now = max(listing[0], default=-1)
+        if cur >= v_now:
             return None
+        walk = self.source._feed_walk(cur, skip_optimize=True, listing=listing)
         g = self.group_col
-        if not self._span_has_deltas(cur, v_now):
-            # a span of only optimize/create commits produces no deltas:
-            # advance the cursor with a data-free txn commit (zero Spark
-            # jobs — the probe above is metadata-only), else every future
-            # refresh re-replays the same span forever
+        if not walk.groups:
+            # a span of only optimize/create commits produces no deltas
+            # and reads no file vacuum could have reclaimed: advance the
+            # cursor with a data-free txn commit (zero Spark jobs — the
+            # walk is metadata-only), else every future refresh
+            # re-replays the same span forever
             self.target.record_txn(self.app_id, int(v_now), expect=cur)
             return None
-        deltas = self.source.read_deltas(cur).filter(
-            F.col("_commit_version") <= v_now
-        )
+        deltas = self.source._deltas_frame(walk)
         agg_exprs = [
             F.sum("_weight").cast("long").alias("__d_rows"),
         ] + [
@@ -267,35 +253,27 @@ class TableReplicator:
             "the cursor race"
         )
 
-    def _span_has_changes(self, cur: int, v_now: int) -> bool:
-        """Metadata-only emptiness probe, same construction as
-        :meth:`IncrementalAggregate._span_has_deltas`: a span of only
-        optimize/create/txn commits feeds the replica nothing — advance
-        the cursor with zero Spark jobs."""
-        for v in self.source._list_versions():
-            if v <= cur or v > v_now:
-                continue
-            c = self.source._read_commit(v)
-            if c["op"] == "optimize":
-                continue
-            if any(
-                "add" in a or "remove" in a or "cdc" in a
-                for a in c["actions"]
-            ):
-                return True
-        return False
-
     def _replicate_once(self) -> "int | None":
-        v_now = self.source.latest_version()
         cur = self.cursor()
-        if v_now < 0 or cur >= v_now:
+        # same single source listing and walk as
+        # IncrementalAggregate._refresh_once; a span of only
+        # optimize/create/txn commits feeds the replica nothing — advance
+        # the cursor with zero Spark jobs
+        listing = self.source._log_listing()
+        v_now = max(listing[0], default=-1)
+        if cur >= v_now:
             return None
-        if not self._span_has_changes(cur, v_now):
+        walk = self.source._feed_walk(
+            cur,
+            skip_optimize=True,
+            require_row_level=True,
+            kinds=("cdc", "add"),
+            listing=listing,
+        )
+        if not walk.groups:
             self.target.record_txn(self.app_id, int(v_now), expect=cur)
             return None
-        rows = self.source.read_row_changes(cur).filter(
-            F.col("_commit_version") <= v_now
-        )
+        rows = self.source._row_changes_frame(walk)
         changes = (
             rows.filter(
                 F.col("_change_type").isin(
@@ -368,10 +346,15 @@ class TableReplicator:
         # the CAS tracks the TARGET's actual high water (which may trail
         # ``cur`` when the caller skipped ahead with since_version)
         expect_box = {"cur": c0}
-        rows = self.source.read_row_changes(cur)
-        versions = [v for v in self.source._list_versions() if v > cur]
+        walk = self.source._feed_walk(
+            cur, skip_optimize=True, require_row_level=True, kinds=("cdc", "add")
+        )
+        versions = [v for v in walk.state["versions"] if v > cur]
         stream = _rt.commit_span_stream(
-            self.source.spark, rows, versions, commits_per_batch
+            self.source.spark,
+            self.source._row_changes_frame(walk),
+            versions,
+            commits_per_batch,
         )
 
         def _apply(batch_df: DataFrame, batch_id: int) -> None:

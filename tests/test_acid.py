@@ -23,6 +23,11 @@ def _table(spark, tmp_path, **kw) -> TxnLogTable:
     )
 
 
+def _live_adds(t, version=None) -> "list[dict]":
+    """The live add actions of ``t``'s fold at ``version``."""
+    return list(t._fold_log(version)["adds"].values())
+
+
 def _rows(t, version=None):
     return {
         (r.k): (r.seq, r.v) for r in t.read(version).select("k", "seq", "v").collect()
@@ -133,7 +138,7 @@ def test_commit_race_append_retries_merge_conflicts(spark, tmp_path):
     # resurrect rows the winner rewrote
     t2 = _table(spark, tmp_path)
     target = [
-        a for a in t2._snapshot_adds() if a["min_key"] <= 1 <= a["max_key"]
+        a for a in _live_adds(t2) if a["min_key"] <= 1 <= a["max_key"]
     ][0]
     _inject_racing_commit(t2, lambda: [{"remove": {"path": target["path"]}}])
     with pytest.raises(ConcurrentModification):
@@ -203,7 +208,7 @@ def test_file_removing_competitor_conflicts_or_restore_rediffs(
     read; restore reads no files and re-diffs against the new head, so
     its commit still lands the target snapshot exactly."""
     t = _race_table(spark, tmp_path)
-    first = [a for a in t._snapshot_adds() if a["min_key"] == 1][0]
+    first = [a for a in _live_adds(t) if a["min_key"] == 1][0]
     _inject_racing_commit(t, lambda: [{"remove": {"path": first["path"]}}])
     if op != "restore":
         with pytest.raises(ConcurrentModification, match="files this"):
@@ -211,10 +216,31 @@ def test_file_removing_competitor_conflicts_or_restore_rediffs(
         assert t.latest_version() == 3
         return
     assert _WRITE_OPS[op](t, spark) == 4
-    assert {a["path"] for a in t._snapshot_adds()} == {
-        a["path"] for a in t._snapshot_adds(1)
+    assert {a["path"] for a in _live_adds(t)} == {
+        a["path"] for a in _live_adds(t, 1)
     }
     assert _rows(t) == _rows(t, version=1)
+
+
+def _count_log_walk(t):
+    """Instrument ``t``'s log access in place: returns ``(calls, reads)``
+    — counts of ``_log_listing``/``_fold_log`` calls, and of
+    ``_read_text`` calls per path (commit and checkpoint bodies, the
+    vacuum marker)."""
+    from collections import Counter
+
+    calls, reads = Counter(), Counter()
+    for name in ("_log_listing", "_fold_log", "_read_text"):
+
+        def counted(*a, _orig=getattr(t, name), _name=name, **kw):
+            if _name == "_read_text":
+                reads[a[0]] += 1
+            else:
+                calls[_name] += 1
+            return _orig(*a, **kw)
+
+        setattr(t, name, counted)
+    return calls, reads
 
 
 def test_commit_protocol_lists_and_folds_the_log_once(spark, tmp_path):
@@ -222,17 +248,8 @@ def test_commit_protocol_lists_and_folds_the_log_once(spark, tmp_path):
     fold that aligns the change set also serves the txn guard and the
     commit attempt — plus one of each for the checkpoint written at a
     checkpoint version. read() and read_changes() list once."""
-    from collections import Counter
-
     t = _table(spark, tmp_path, checkpoint_interval=4)
-    calls = Counter()
-    for name in ("_log_listing", "_fold_log"):
-
-        def counted(*a, _orig=getattr(t, name), _name=name, **kw):
-            calls[_name] += 1
-            return _orig(*a, **kw)
-
-        setattr(t, name, counted)
+    calls, _ = _count_log_walk(t)
     for b in range(6):
         calls.clear()
         v = t.merge(
@@ -247,6 +264,210 @@ def test_commit_protocol_lists_and_folds_the_log_once(spark, tmp_path):
     calls.clear()
     t.read_changes(2)
     assert calls["_log_listing"] == 1, calls
+
+
+@pytest.fixture(scope="module")
+def walk_table(spark, tmp_path_factory):
+    """A 32-commit change-feed table (checkpoints at 10, 20, 30): an
+    append, 27 data-free property commits, four merges."""
+    t = TxnLogTable(
+        spark, str(tmp_path_factory.mktemp("walk") / "src"), key="k",
+        order_col="seq", checkpoint_interval=10, change_feed=True,
+    )
+    t.append(spark.createDataFrame([(k, 0, "a") for k in range(8)], _S))
+    for i in range(27):
+        t.set_property(f"p{i}", str(i))
+    for b in range(4):
+        t.merge(spark.createDataFrame([(b, b + 1, "x"), (b + 20, 1, "y")], _S))
+    assert t.latest_version() == 31
+    return t
+
+
+def test_read_side_ops_walk_the_log_once(spark, walk_table, tmp_path):
+    """Every read-side and maintenance op makes ONE log listing, at most
+    ONE fold, and reads each commit/checkpoint body at most once —
+    vacuum folds once below its window and walks the retained commits
+    once; the incremental consumers take the span, its emptiness and
+    its head from the feed's own walk."""
+    from data_pipeline_kafka_ek_spark.sources.incremental import (
+        IncrementalAggregate,
+        TableReplicator,
+    )
+
+    t = walk_table
+    mv = IncrementalAggregate(t, str(tmp_path / "mv"), group_col="v")
+    rep = TableReplicator(t, str(tmp_path / "rep"))
+    mv.refresh()
+    rep.replicate()
+    calls, reads = _count_log_walk(t)
+
+    def walk(op):
+        calls.clear()
+        reads.clear()
+        op()
+        assert calls["_log_listing"] == 1, calls
+        assert calls["_fold_log"] <= 1, calls
+        assert max(reads.values(), default=0) <= 1, reads
+        return sum(reads.values())
+
+    # a caught-up poll stops at the listing: no fold, no body read
+    for consumer in (mv.refresh, rep.replicate):
+        assert walk(consumer) == 0 and calls["_fold_log"] == 0, calls
+
+    # checkpoint 20 + commit 21 (the fold at wm - 1) + commits 22..31
+    assert walk(lambda: t.vacuum(retain_versions=10, dry_run=True)) <= 12
+    walk(lambda: t.read_pruned([("k", ">=", 5)]))
+    walk(lambda: t.stream_changes(25))
+    walk(t.history)
+    for b in range(3):
+        t.merge(spark.createDataFrame([(b, 10 + b, "z")], _S))
+    walk(mv.refresh)
+    walk(rep.replicate)
+    assert mv.cursor() == rep.cursor() == t.latest_version() == 34
+
+
+def test_history_py4j_round_trips_per_commit(spark, walk_table):
+    """history() on a fresh handle costs a handful of py4j round trips
+    per commit: the JVM classes and the FileSystem are resolved once
+    per table, not on every body read."""
+    t = TxnLogTable(spark, walk_table.path, key="k", order_col="seq")
+    client = spark.sparkContext._gateway._gateway_client
+    inner = client.send_command
+    sent = [0]
+
+    def counted(*a, **kw):
+        sent[0] += 1
+        return inner(*a, **kw)
+
+    client.send_command = counted
+    try:
+        h = t.history()
+    finally:
+        client.send_command = inner
+    assert len(h) >= 32
+    assert sent[0] <= 8 * len(h), sent[0]
+
+
+def test_vacuum_protects_exactly_the_retained_snapshots(spark, tmp_path):
+    """vacuum's protected set is the union of the retained snapshots'
+    live adds (plain-Python reference: ``_fold_log(v)["adds"]`` for
+    every v in the window), and its change-file set is the cdc paths of
+    the retained commits — across a checkpoint and a restore inside the
+    window, for dry runs at several retentions and for the real run."""
+    import os
+
+    from data_pipeline_kafka_ek_spark.sources.acid import _canon
+
+    t = _table(
+        spark, tmp_path, files_per_commit=1, checkpoint_interval=4,
+        change_feed=True,
+    )
+    t.append(spark.createDataFrame([(k, 0, "a") for k in range(4)], _S))
+    t.merge(spark.createDataFrame([(1, 1, "b")], _S))
+    t.append(spark.createDataFrame([(10, 0, "c")], _S))
+    t.merge(spark.createDataFrame([(10, 1, "d")], _S))
+    t.merge(spark.createDataFrame([(2, 1, "e")], _S))  # v4: checkpoint
+    t.restore(version=3)
+    t.merge(spark.createDataFrame([(3, 1, "f")], _S))
+    latest = t.latest_version()
+    assert latest == 6
+
+    def on_disk(kind):
+        root = tmp_path / "tbl" / kind
+        return {
+            os.path.join(d, f)
+            for d, _, fs in os.walk(root)
+            for f in fs
+            if f.startswith("part-")
+        }
+
+    def reference(retain):
+        wm = max(0, latest - retain + 1)
+        adds = set().union(
+            *({_canon(p) for p in t._fold_log(v)["adds"]}
+              for v in range(wm, latest + 1))
+        )
+        cdc = {
+            _canon(a["cdc"]["path"])
+            for v in range(wm, latest + 1)
+            for a in t._read_commit(v)["actions"]
+            if "cdc" in a
+        }
+        return adds, cdc
+
+    files, changes = on_disk("files"), on_disk("changes")
+    for retain in (1, 2, 3, 4, 7):
+        adds, cdc = reference(retain)
+        assert adds <= files and cdc <= changes, retain
+        preview = t.vacuum(
+            retain_versions=retain, retain_tmp_s=0.0, min_age_s=0.0,
+            dry_run=True,
+        )
+        assert preview == {
+            "data_files_deleted": len(files - adds),
+            "tmp_files_deleted": 0,
+            "change_files_deleted": len(changes - cdc),
+        }, retain
+    assert (on_disk("files"), on_disk("changes")) == (files, changes)
+    adds, cdc = reference(3)
+    assert files - adds and changes - cdc  # the window excludes something
+    before = {v: _rows(t, v) for v in range(4, latest + 1)}
+    real = t.vacuum(retain_versions=3, retain_tmp_s=0.0, min_age_s=0.0)
+    assert real["data_files_deleted"] == len(files - adds)
+    assert real["change_files_deleted"] == len(changes - cdc)
+    assert (on_disk("files"), on_disk("changes")) == (adds, cdc)
+    assert {v: _rows(t, v) for v in range(4, latest + 1)} == before
+    assert t.read_changes(3).count() > 0
+
+
+def test_optimize_only_span_advances_consumers_with_zero_jobs(spark, tmp_path):
+    """Refresh and replicate over a span of only optimize and data-free
+    commits take its emptiness from the feed's walk: the cursor advances
+    to the head through a data-free txn commit and no Spark job runs —
+    also after a vacuum moved the watermark past the cursors, because an
+    empty span reads no file vacuum could have reclaimed."""
+    from data_pipeline_kafka_ek_spark.sources.incremental import (
+        IncrementalAggregate,
+        TableReplicator,
+    )
+
+    src = _table(spark, tmp_path, files_per_commit=1, change_feed=True)
+    for i in range(3):
+        src.append(spark.createDataFrame([(i, 1, "g")], _S))
+    mv = IncrementalAggregate(src, str(tmp_path / "mv"), group_col="v")
+    rep = TableReplicator(src, str(tmp_path / "rep"))
+    assert mv.refresh() is not None and rep.replicate() is not None
+    assert src.optimize() is not None
+    src.set_property("note", "x")
+    src.vacuum(retain_versions=1, retain_tmp_s=0.0, min_age_s=0.0)
+    # optimize + property commit: the watermark is at the head, two
+    # past both cursors (below both feeds' vacuum bounds)
+    assert src._vacuum_watermark() == src.latest_version()
+    assert mv.cursor() == rep.cursor() == src.latest_version() - 2
+    sc = spark.sparkContext
+    sc.setJobGroup("optimize-only-span", "consumers over an optimize span")
+    try:
+        assert mv.refresh() is None
+        assert rep.replicate() is None
+    finally:
+        sc.setJobGroup("optimize-only-span-done", "")
+    assert list(sc.statusTracker().getJobIdsForGroup("optimize-only-span")) == []
+    assert mv.cursor() == rep.cursor() == src.latest_version()
+
+
+def test_replicate_refuses_a_merge_without_change_files(spark, tmp_path):
+    """A merge committed with change_feed off has no row-level images:
+    replicate() raises instead of degrading, and the cursor stays."""
+    from data_pipeline_kafka_ek_spark.sources.incremental import TableReplicator
+
+    src = _table(spark, tmp_path, files_per_commit=1)
+    src.append(spark.createDataFrame([(1, 1, "x")], _S))
+    rep = TableReplicator(src, str(tmp_path / "rep"))
+    assert rep.replicate() is not None
+    src.merge(spark.createDataFrame([(1, 2, "y")], _S))
+    with pytest.raises(ValueError, match="without row-level change"):
+        rep.replicate()
+    assert rep.cursor() == 0
 
 
 def test_history_reads_each_body_once_and_dates_legacy_commits_by_mtime(
@@ -330,7 +551,7 @@ def test_checkpoint_bounds_log_replay(spark, tmp_path):
                 full[a["add"]["path"]] = a["add"]
             elif "remove" in a:
                 full.pop(a["remove"]["path"], None)
-    assert {a["path"] for a in t._snapshot_adds()} == set(full)
+    assert {a["path"] for a in _live_adds(t)} == set(full)
     assert len(_rows(t)) == 12
 
 
@@ -397,7 +618,7 @@ def test_unreferenced_files_lists_only_orphans(spark, tmp_path):
     # drop an orphan parquet into the files area: it must be flagged
     import shutil
 
-    live = t._snapshot_adds()[0]["path"].replace("file:", "")
+    live = _live_adds(t)[0]["path"].replace("file:", "")
     orphan = str(tmp_path / "tbl" / "files" / "c-orphan" / "part-orphan.parquet")
     import os
 
@@ -578,7 +799,7 @@ def test_checkpoint_complete_under_concurrent_writers(spark, tmp_path):
                     full[a["add"]["path"]] = a["add"]
                 elif "remove" in a:
                     full.pop(a["remove"]["path"], None)
-        assert {a["path"] for a in t._snapshot_adds(v)} == set(full), v
+        assert {a["path"] for a in _live_adds(t, v)} == set(full), v
 
 
 def test_txn_seen_reads_checkpoint_plus_tail_only(spark, tmp_path):
@@ -921,7 +1142,7 @@ def test_optimize_size_targeted_bin_packs_small_files(spark, tmp_path):
                 "k long, seq long, v string",
             )
         )
-    adds = t._snapshot_adds()
+    adds = _live_adds(t)
     assert all(a.get("bytes") for a in adds), "adds must record bytes"
     large = max(adds, key=lambda a: a["bytes"])
     smalls = [a for a in adds if a["path"] != large["path"]]
@@ -939,7 +1160,7 @@ def test_optimize_size_targeted_bin_packs_small_files(spark, tmp_path):
     added = [a["add"] for a in c["actions"] if "add" in a]
     # exactly the small files were rewritten; the large file is untouched
     assert removed == {a["path"] for a in smalls}
-    assert large["path"] in {a["path"] for a in t._snapshot_adds()}
+    assert large["path"] in {a["path"] for a in _live_adds(t)}
     # outputs cluster at the target: bin count is ceil(total/target)
     assert len(added) == -(-total // target) == 2
     assert all(a["bytes"] and a["bytes"] < large["bytes"] for a in added)
@@ -956,7 +1177,7 @@ def test_optimize_size_targeted_bin_packs_small_files(spark, tmp_path):
             )
         )
     cand = sorted(
-        (a["bytes"] for a in t._snapshot_adds() if a["bytes"] < floor)
+        (a["bytes"] for a in _live_adds(t) if a["bytes"] < floor)
     )
     budget = cand[0] + cand[1] + cand[2] + 1  # room for ~3 files
     v2 = t.optimize(
@@ -991,7 +1212,7 @@ def test_optimize_honors_recorded_size_policy(spark, tmp_path):
             "k long, seq long, v string",
         )
     )
-    large = max(t._snapshot_adds(), key=lambda a: a["bytes"])
+    large = max(_live_adds(t), key=lambda a: a["bytes"])
     t.set_property("optimize.target_file_bytes", str(large["bytes"]))
     for i in range(5):
         t.append(
@@ -1000,9 +1221,9 @@ def test_optimize_honors_recorded_size_policy(spark, tmp_path):
             )
         )
     assert eng.sql("OPTIMIZE szp").first().version is not None
-    assert large["path"] in {a["path"] for a in t._snapshot_adds()}
+    assert large["path"] in {a["path"] for a in _live_adds(t)}
     d = eng.sql("DESCRIBE DETAIL szp").first()
-    assert d.size_bytes == sum(a["bytes"] for a in t._snapshot_adds())
+    assert d.size_bytes == sum(a["bytes"] for a in _live_adds(t))
     assert d.num_rows == 40005
 
 
@@ -1017,7 +1238,7 @@ def test_auto_optimize_is_size_bounded(spark, tmp_path):
             "k long, seq long, v string",
         )
     )
-    large = max(t._snapshot_adds(), key=lambda a: a["bytes"])
+    large = max(_live_adds(t), key=lambda a: a["bytes"])
     t.set_property("auto_optimize.file_threshold", "3")
     # scale the bin target to the test data: the floor (target/2) sits
     # above every 1-row file but below the bulk file
@@ -1031,7 +1252,7 @@ def test_auto_optimize_is_size_bounded(spark, tmp_path):
     ops = [h["op"] for h in t.history()]
     assert "optimize" in ops, "auto-compaction did not fire"
     # the large file survived every inline pass untouched
-    assert large["path"] in {a["path"] for a in t._snapshot_adds()}
+    assert large["path"] in {a["path"] for a in _live_adds(t)}
     assert t.read().count() == 40005
 
     # a snapshot stuck above the threshold with NO compactable debt
@@ -2195,7 +2416,7 @@ def test_optimize_zorder_clusters_every_listed_dimension(spark, tmp_path):
     t.append(df)
 
     def per_file_ranges(col):
-        paths = [a["path"] for a in t._snapshot_adds()]
+        paths = [a["path"] for a in _live_adds(t)]
         stats = (
             spark.read.parquet(*paths)
             .groupBy(F.input_file_name().alias("f"))
@@ -2209,7 +2430,7 @@ def test_optimize_zorder_clusters_every_listed_dimension(spark, tmp_path):
             1 for flo, fhi in per_file_ranges(col) if not (fhi < lo or flo > hi)
         )
 
-    n_files = len(t._snapshot_adds())
+    n_files = len(_live_adds(t))
     assert n_files >= 12
     # default layout: a 10%-wide k predicate prunes hard, a d predicate
     # prunes NOTHING (every file overlaps)
@@ -2229,13 +2450,13 @@ def test_optimize_zorder_clusters_every_listed_dimension(spark, tmp_path):
     }  # time travel intact
 
     # z-order: the SAME 10%-wide predicate prunes on BOTH dimensions
-    n_files_z = len(t._snapshot_adds())
+    n_files_z = len(_live_adds(t))
     assert files_overlapping("k", 0, 99) <= n_files_z // 2
     assert files_overlapping("d", 0, 99) <= n_files_z // 2
     # recorded merge-key stats stay truthful per file
     actual = sorted(per_file_ranges("k"))
     recorded = sorted(
-        (a["min_key"], a["max_key"]) for a in t._snapshot_adds()
+        (a["min_key"], a["max_key"]) for a in _live_adds(t)
     )
     assert recorded == actual
     # merges still work against the z-ordered layout
@@ -2346,12 +2567,12 @@ def test_delete_where_predicate_semantics_and_feeds(spark, tmp_path):
     rep = TableReplicator(t, str(tmp_path / "rep"), files_per_commit=2)
     rep.replicate()
 
-    files_before = {a["path"] for a in t._snapshot_adds()}
+    files_before = {a["path"] for a in _live_adds(t)}
     v = t.delete_where(F.col("x") > 50)
     assert v is not None
     assert {r.k for r in t.read().collect()} == {1, 2, 4}
     # only the file(s) holding k=3 were rewritten
-    files_after = {a["path"] for a in t._snapshot_adds()}
+    files_after = {a["path"] for a in _live_adds(t)}
     assert files_before & files_after, "untouched files must survive verbatim"
     # typed feed carries the delete image; the replica converges
     typed = t.read_row_changes(v - 1)
@@ -2694,7 +2915,7 @@ def test_describe_detail_is_metadata_only(spark, tmp_path):
     t.add_constraint("x_nonneg", "x >= 0")
     d = t.detail()
     assert d["version"] == 1 and d["num_rows"] == 10
-    assert d["num_files"] == len(t._snapshot_adds())
+    assert d["num_files"] == len(_live_adds(t))
     assert d["constraints"] == {"x_nonneg": "x >= 0"}
     assert d["key"] == "k" and d["change_feed"] is True
     assert d["vacuum_watermark"] == 0
@@ -2889,7 +3110,7 @@ def test_zorder_clustering_shrinks_the_dml_rewrite_set(spark, tmp_path):
     )
 
     def matched_files(cond):
-        live = [a["path"] for a in t._snapshot_adds()]
+        live = [a["path"] for a in _live_adds(t)]
         return (
             spark.read.parquet(*live)
             .filter(cond)
@@ -3130,7 +3351,7 @@ def test_log_stats_data_skipping(spark, tmp_path):
             "k long, seq long, v string, d double, blob string",
         )
     )
-    adds = t._snapshot_adds()
+    adds = _live_adds(t)
     s = adds[0]["stats"]
     # key column stats agree with the dedicated merge-key range
     assert s["k"]["min"] == adds[0]["min_key"]

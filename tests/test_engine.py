@@ -546,7 +546,7 @@ def test_engine_sql_routes_insert_into_acid_table(spark, tmp_path):
     # the recorded schema forever
     with pytest.raises(ValueError, match="unknown column"):
         eng.sql("INSERT INTO ins (k, nosuch) VALUES (5, 'x')")
-    assert {f.name for f in t._latest_schema().fields} == {
+    assert set(t.read().columns) == {
         "k", "seq", "v", "x"
     }
 
@@ -1178,7 +1178,7 @@ def test_sql_identifier_resolution_is_case_insensitive(spark, tmp_path):
     t.append(spark.createDataFrame([(1, 1, "a")], "k long, seq long, v string"))
     eng.refresh_acid_table("ci")
     eng.sql("INSERT INTO ci (K, SEQ, V) VALUES (2, 1, 'b')")
-    assert {f.name for f in t._latest_schema().fields} == {"k", "seq", "v"}
+    assert set(t.read().columns) == {"k", "seq", "v"}
     spark.createDataFrame(
         [(2, 2, "B2")], "K long, SEQ long, V string"
     ).createOrReplaceTempView("ci_src")
@@ -1187,7 +1187,7 @@ def test_sql_identifier_resolution_is_case_insensitive(spark, tmp_path):
         "WHEN MATCHED THEN UPDATE SET * "
         "WHEN NOT MATCHED THEN INSERT *"
     )
-    assert {f.name for f in t._latest_schema().fields} == {"k", "seq", "v"}
+    assert set(t.read().columns) == {"k", "seq", "v"}
     assert {r.k: r.v for r in eng.sql("SELECT k, v FROM ci").collect()} == {
         1: "a", 2: "B2",
     }
@@ -1218,7 +1218,7 @@ def test_merge_expression_tombstone_never_pollutes_schema(spark, tmp_path):
         "WHEN MATCHED THEN UPDATE SET * "
         "WHEN NOT MATCHED THEN INSERT *"
     )
-    assert {f.name for f in t._latest_schema().fields} == {"k", "seq", "x"}
+    assert set(t.read().columns) == {"k", "seq", "x"}
     assert {r.k: r.x for r in eng.sql("SELECT k, x FROM met").collect()} == {
         1: 10.0, 3: 30.0,
     }

@@ -373,10 +373,9 @@ def test_io_bound_classification_is_explicit_not_substring():
 
 def test_bench_families_partition_and_io_list_sync():
     """Every benched query belongs to exactly one --families group, and
-    the io-bound name lists in bench.py and bench_compare.py (the
-    fallback for pre-r16 files) are identical."""
+    the benched io-bound queries are exactly the 'acid' family
+    (bench.py and bench_compare read one list, tools/query_families.py)."""
     import bench as bench_mod
-    import bench_compare
 
     from data_pipeline_kafka_ek_spark.plans import extensions  # noqa: F401
     from data_pipeline_kafka_ek_spark.plans.catalog import bench_queries
@@ -389,6 +388,24 @@ def test_bench_families_partition_and_io_list_sync():
     # family members that are not benched would silently no-op a filter
     grouped = set().union(*bench_mod.QUERY_FAMILIES.values())
     assert grouped == benched, grouped ^ benched
-    assert bench_mod.IO_BOUND_QUERIES == bench_compare.IO_BOUND_FALLBACK
     # the benched io-bound queries are exactly the 'acid' A/B family
     assert bench_mod.IO_BOUND_QUERIES & benched == bench_mod.QUERY_FAMILIES["acid"]
+
+
+def test_bench_compare_imports_no_engine_code():
+    """Comparing two bench JSON files needs the standard library only:
+    importing bench_compare loads neither pyspark nor bench.py."""
+    import subprocess
+
+    tools = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
+    )
+    probe = (
+        f"import sys; sys.path.insert(0, {tools!r}); import bench_compare; "
+        "print(sorted(m for m in ('pyspark', 'bench') if m in sys.modules))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe], capture_output=True, text=True,
+        check=True,
+    )
+    assert out.stdout.strip() == "[]", out

@@ -36,23 +36,12 @@ def load_bench(path_or_obj) -> dict:
 
 
 # Fallback io-bound classification for bench files that predate the
-# in-band ``canary_families`` field (r16): EXPLICIT names, never a
-# substring heuristic — "'acid' in name" misclassified
+# in-band ``canary_families`` field (r16): the explicit name list
+# bench.py emits from, never a substring heuristic — "'acid' in name" misclassified
 # t_streaming_dml_replica, an ACID feed twin (it runs TxnLogTable
 # merges per micro-batch in foreachBatch) whose cost is commit-protocol
-# scratch-fs latency. Keep in sync with bench.py's IO_BOUND_QUERIES.
-IO_BOUND_FALLBACK = frozenset({
-    "t_streaming_acid_changes",
-    "x_acid_incremental_mv",
-    "t_streaming_dml_replica",
-    "x_acid_dml_lifecycle",
-    "x_acid_merge_sql",
-    "x_acid_replica_convergence",
-    "x_acid_restore_rewind",
-    "x_acid_sized_compaction",
-    "x_acid_stats_skipping",
-    "x_acid_time_travel_diff",
-})
+# scratch-fs latency.
+from query_families import IO_BOUND_QUERIES  # noqa: E402
 
 
 def _is_io_bound(name: str, families: dict) -> bool:
@@ -66,7 +55,7 @@ def _is_io_bound(name: str, families: dict) -> bool:
     fam = families.get(name)
     if fam is not None:
         return fam == "io"
-    return name in IO_BOUND_FALLBACK
+    return name in IO_BOUND_QUERIES
 
 
 def _median_canary(load: dict, key: str, samples_key: str):
