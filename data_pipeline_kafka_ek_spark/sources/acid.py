@@ -72,7 +72,7 @@ import time
 import uuid
 from types import SimpleNamespace
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 from pyspark.sql.window import Window
 
@@ -345,6 +345,18 @@ def _partition_preimages(n: int) -> "list[int]":
     return out  # type: ignore[return-value]
 
 
+def _range_route(col, bounds: list):
+    """The shuffle-routing value for ``repartition(len(bounds) + 1,
+    <this>)`` that sends a row to partition #(``bounds`` below ``col``),
+    NULL to partition 0: the murmur3 preimage literal of that partition
+    id (see :func:`_partition_preimages`)."""
+    pid = F.coalesce(
+        sum(((col > F.lit(b)).cast("int") for b in bounds), F.lit(0)), F.lit(0)
+    )
+    pre = _partition_preimages(len(bounds) + 1)
+    return F.element_at(F.array(*map(F.lit, pre)), pid + 1)
+
+
 def _stats_range_boundaries(
     sources: "list[tuple]", n_parts: int
 ) -> "list[float] | None":
@@ -441,6 +453,7 @@ class _PartFile:
             from pyspark import TaskContext
 
             self.fs, root = pafs.FileSystem.from_uri(self.root_uri)
+            self.fs.create_dir(root)
             pid = TaskContext.get().partitionId()
             self.final = f"{root}/part-{pid:05d}.parquet"
             self.tmp = f"{self.final}.{uuid.uuid4().hex}.tmp"
@@ -560,9 +573,9 @@ def _fused_write_partitions(
     skip_cols: "list[str]" = (),
 ) -> "list[dict]":
     """The single write job behind ``_write_data_files`` (``add`` files,
-    stats folded on ``key``) and a restore's change files (``cdc``, no
-    stats): every partition's task streams its Arrow batches into one
-    parquet file."""
+    stats folded on ``key``; append and optimize) and a restore's
+    change files (``cdc``, no stats): every partition's task streams
+    its Arrow batches into one parquet file."""
 
     def _write_one_partition(batches):
         import pyarrow as pa
@@ -575,42 +588,69 @@ def _fused_write_partitions(
     return _run_writer(clustered, _write_one_partition)
 
 
-def _fused_write_commit_partitions(
+def _rewrite_write_partitions(
     clustered: DataFrame,
     commit_dir: str,
-    cdc_dir: str,
+    cdc_dir: "str | None",
+    op: str,
     key: str,
     skip_cols: "list[str]",
     data_cols: "list[str]",
-    cdc_cols: "list[str]",
+    pre_cols: "dict[str, str]",
 ) -> "list[dict]":
-    """The single job behind a predicate rewrite's change-feed commit:
-    each range partition's task streams its Arrow batches ONCE,
-    splitting every batch on the ``__ct`` tag — rows with a NULL tag are
-    table data (written with the stats fold), rows with a tag are this
-    commit's change images (written into ``cdc_dir`` with ``__ct``
-    restored to CDF's ``_change_type`` name)."""
-    # cdc columns as they sit in the fused frame: the CDF tag column
-    # rides as __ct (a table column legitimately named _change_type
-    # would collide inside the union otherwise)
-    cdc_in_cols = [c if c != "_change_type" else "__ct" for c in cdc_cols]
+    """The single job behind a predicate DELETE/UPDATE commit.
+    ``clustered`` holds the rows of exactly the files that hold a match,
+    routed on ``__path`` so every row of one input file lands in one
+    partition. Each row carries ``data_cols`` — its image after the
+    statement (UPDATE's assignments already applied to matched rows) —
+    and ``__m``, whether the predicate is TRUE. Each task writes one
+    replacement data file: every row for ``update``, the unmatched rows
+    for ``delete``. With ``cdc_dir`` set it also writes the matched rows'
+    Delta-CDF images: ``delete``, or ``update_preimage`` (the old values
+    of the assigned columns ride in ``pre_cols``' carrier columns) and
+    ``update_postimage``. Besides the file records, the task reports
+    every input path it replaced as a ``read`` record."""
 
-    def _write_one_partition(batches):
+    def _rewrite_one_partition(batches):
         import pyarrow as pa
         import pyarrow.compute as pc
 
         data = _PartFile(commit_dir, "add", key, skip_cols)
-        cdc = _PartFile(cdc_dir, "cdc")
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            is_cdc = pc.is_valid(tbl.column("__ct"))
-            data.write(tbl.filter(pc.invert(is_cdc)).select(data_cols))
-            cdc.write(
-                tbl.filter(is_cdc).select(cdc_in_cols).rename_columns(cdc_cols)
-            )
-        return [data.close(), cdc.close()]
+        cdc = _PartFile(cdc_dir, "cdc") if cdc_dir is not None else None
+        paths: set = set()
 
-    return _run_writer(clustered, _write_one_partition)
+        def tagged(t, kind):
+            return t.append_column(
+                "_change_type", pa.array([kind] * t.num_rows, pa.string())
+            )
+
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            t = pa.Table.from_batches([batch])
+            paths.update(pc.unique(t.column("__path")).to_pylist())
+            m = t.column("__m")
+            img = t.select(data_cols)
+            data.write(img if op == "update" else img.filter(pc.invert(m)))
+            if cdc is None:
+                continue
+            post = img.filter(m)
+            if op == "delete":
+                cdc.write(tagged(post, "delete"))
+                continue
+            old = t.filter(m)
+            pre = pa.Table.from_arrays(
+                [old.column(pre_cols.get(c, c)) for c in data_cols],
+                schema=post.schema,
+            )
+            cdc.write(pa.concat_tables([
+                tagged(pre, "update_preimage"), tagged(post, "update_postimage")
+            ]))
+        return [data.close(), cdc.close() if cdc is not None else None] + [
+            {"kind": "read", "path": p} for p in sorted(paths)
+        ]
+
+    return _run_writer(clustered, _rewrite_one_partition)
 
 
 def _merge_write_partitions(
@@ -1037,6 +1077,11 @@ class TxnLogTable:
         inside each commit body, so it does not depend on filesystem
         mtimes. Raises if the timestamp predates the table's first
         commit — there is no state to read there."""
+        return self._version_at(timestamp, self._list_versions())
+
+    def _version_at(self, timestamp, versions: "list[int]") -> int:
+        """:meth:`version_at` over the commit ``versions`` of a listing
+        already in hand."""
         import datetime as _dt
 
         if isinstance(timestamp, str):
@@ -1047,7 +1092,7 @@ class TxnLogTable:
             ts = timestamp.timestamp()
         else:
             ts = float(timestamp)
-        times = self._commit_times(self._list_versions(), self._read_commit)
+        times = self._commit_times(versions, self._read_commit)
         candidates = [v for v, t in times if t <= ts]
         if not candidates:
             raise ValueError(
@@ -1096,7 +1141,7 @@ class TxnLogTable:
     def _stats_boundaries_for(
         self, df: DataFrame, n_files: int, range_sources
     ) -> "list | None":
-        """Driver-derived range boundaries for a commit write, or None
+        """Driver-derived range boundaries for a MERGE write, or None
         to fall back to ``repartitionByRange``'s sampling job.
         ``range_sources`` is the caller's zero-cost knowledge of the
         incoming key distribution — the touched files' recorded
@@ -1142,21 +1187,12 @@ class TxnLogTable:
             return df.repartitionByRange(
                 n_files, cluster
             ).sortWithinPartitions(*order)
-        n = len(boundaries) + 1
-        pid = None
-        for b in boundaries:
-            term = (cluster > F.lit(b)).cast("int")
-            pid = term if pid is None else pid + term
-        pid = F.coalesce(pid, F.lit(0)) if pid is not None else F.lit(0)
-        route = F.element_at(
-            F.array(*[F.lit(x) for x in _partition_preimages(n)]),
-            pid + 1,
-        )
-        return df.repartition(n, route).sortWithinPartitions(*order)
+        return df.repartition(
+            len(boundaries) + 1, _range_route(cluster, boundaries)
+        ).sortWithinPartitions(*order)
 
     def _write_data_files(
-        self, df: DataFrame, cluster_expr=None, n_files: "int | None" = None,
-        range_sources=None,
+        self, df: DataFrame, cluster_expr=None, n_files: "int | None" = None
     ) -> "list[dict]":
         """Write ``df`` key-range clustered into a fresh immutable commit
         directory; return add actions carrying per-file [min,max] key
@@ -1193,15 +1229,8 @@ class TxnLogTable:
         ``files_per_commit`` (used by size-targeted compaction to emit
         ~target-size outputs)."""
         cluster = cluster_expr if cluster_expr is not None else F.col(self.key)
-        boundaries = (
-            self._stats_boundaries_for(
-                df, n_files or self.files_per_commit, range_sources
-            )
-            if cluster_expr is None
-            else None
-        )
         clustered = self._cluster_by_key(
-            df, n_files or self.files_per_commit, cluster, boundaries
+            df, n_files or self.files_per_commit, cluster, None
         )
         # __zorder_* are clustering scaffolding (bucket ids + z-value),
         # projected away after the range partition + sort consumed them —
@@ -1234,11 +1263,10 @@ class TxnLogTable:
 
     def _new_dir(self, kind: str) -> str:
         """A fresh, unreferenced commit directory under ``kind``
-        (``files`` or ``changes``)."""
-        d = f"{self.path}/{kind}/c-{uuid.uuid4().hex}"
-        fs, jdir = self._fs(d)
-        fs.mkdirs(jdir)
-        return d
+        (``files`` or ``changes``). Only named here: the first file
+        written into it creates it, so a write that produces no file
+        (a DML that matched nothing) leaves nothing behind."""
+        return f"{self.path}/{kind}/c-{uuid.uuid4().hex}"
 
     def _cdc_paths(
         self, records: "list[dict]", cdc_dir: str, schema: StructType
@@ -1262,6 +1290,7 @@ class TxnLogTable:
         from pyspark.sql.pandas.types import to_arrow_schema
 
         fsys, root = _pafs.FileSystem.from_uri(cdc_dir)
+        fsys.create_dir(root)
         p = f"{root}/part-00000.parquet"
         _pq.write_table(
             to_arrow_schema(schema).empty_table(), p, filesystem=fsys
@@ -2000,26 +2029,27 @@ class TxnLogTable:
         predicate is NULL are KEPT (only TRUE deletes). Returns the new
         version, or None when nothing matched (no commit — and a
         provided txn cursor still advances via a data-free commit).
-        File discovery is one filter-pushdown scan — parquet footer
-        min/max stats skip whole files/row-groups, so a predicate
-        aligned with the clustering (merge key, or any OPTIMIZE ZORDER
-        BY dimension) touches only the files it must. With
-        ``change_feed=True`` the commit records row-level ``delete``
-        images, so feeds and replicas move O(deleted rows). Concurrency:
+        The rewrite is ONE pass (:meth:`_rewrite_where`): the candidate
+        files are read once, the files with a match are found and
+        rewritten in the same job, and with ``change_feed=True`` the
+        same kernel writes row-level ``delete`` images, so feeds and
+        replicas move O(deleted rows). A change-feed DELETE runs two
+        Spark jobs: the scan's shuffle-map job and the write. Concurrency:
         same optimistic rule as MERGE.
 
         Log-stats file pruning is AUTOMATIC for string conditions: the
         simple top-level ``col op literal`` / ``col BETWEEN a AND b``
         conjuncts of the predicate text are derived mechanically
         (:func:`conjuncts_from_condition` — implied by the condition by
-        construction) and shrink the hit-scan's file list before any
-        task is scheduled (see :meth:`prune_files`). At 100k+ files
-        this is the difference between scheduling a scan task per file
-        and touching only the clustered slice the DELETE names.
-        ``prune`` remains only as an ADVANCED supplement for Column
-        conditions or conjuncts the deriver cannot see; any caller-
-        supplied conjunct must be IMPLIED by ``condition`` — an
-        unsound one silently keeps matching rows."""
+        construction) and shrink the scanned file list before any task
+        is scheduled (see :meth:`prune_files`); a predicate aligned with
+        the clustering (merge key, or any OPTIMIZE ZORDER BY dimension)
+        reads only the files it must. A Column condition has no text to
+        derive from, so it reads every live file unless ``prune`` is
+        given. ``prune`` is an ADVANCED supplement for Column conditions
+        or conjuncts the deriver cannot see; any caller-supplied
+        conjunct must be IMPLIED by ``condition`` — an unsound one
+        silently keeps matching rows."""
         return self._rewrite_where(
             "delete", condition, None, txn, max_retries, prune
         )
@@ -2040,10 +2070,10 @@ class TxnLogTable:
         NULL-predicate rows are untouched (only TRUE updates). Returns
         the new version, or None when nothing matched. With
         ``change_feed=True`` the commit records ``update_preimage`` /
-        ``update_postimage`` row images. Same pruning and concurrency
-        shape as :meth:`delete_where`: string conditions derive their
-        log-stats prune conjuncts automatically; ``prune`` is the same
-        advanced implied-by-condition supplement."""
+        ``update_postimage`` row images from the same pass. Right-hand
+        sides read the OLD row. Same one-pass rewrite, job count,
+        pruning and concurrency shape as :meth:`delete_where`, plus one
+        aggregate job when the table has CHECK constraints."""
         if not assignments:
             raise ValueError("update_where needs at least one assignment")
         return self._rewrite_where(
@@ -2053,7 +2083,15 @@ class TxnLogTable:
     def _rewrite_where(
         self, op, condition, assignments, txn, max_retries, prune=None
     ) -> "int | None":
+        """Replacement files follow the input files (Delta's file-level
+        rewrite), so a Z-ORDER layout keeps its locality."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
+
+        def _as_expr(v):
+            if isinstance(v, Column):
+                return v
+            return F.expr(v) if isinstance(v, str) else F.lit(v)
+
         if prune is not None:
             _validate_conjuncts(prune)
         if isinstance(condition, str):
@@ -2077,124 +2115,119 @@ class TxnLogTable:
                 return None
             live = list(state["adds"].values())
             if prune is not None:
-                # log-stats file skipping BEFORE the hit-scan: the
-                # caller promised the conjuncts are implied by the
-                # condition, so files they rule out cannot hold a match
+                # log-stats file skipping BEFORE the scan: the caller
+                # promised the conjuncts are implied by the condition,
+                # so files they rule out cannot hold a match
                 live = [a for a in live if _stats_may_match(a, prune)]
             if not live:
                 return no_match()
             sch = _schema_of(state["schema"])
-            if assignments is not None:
-                cols = (
-                    [f.name for f in sch.fields]
-                    if sch is not None
-                    else None
-                )
-                if cols is not None:
-                    unknown = sorted(set(assignments) - set(cols))
-                    if unknown:
-                        raise ValueError(
-                            f"UPDATE assigns unknown columns {unknown} "
-                            "(assignments must target existing columns)"
-                        )
+            if assignments is not None and sch is not None:
+                unknown = sorted(set(assignments) - set(sch.names))
+                if unknown:
+                    raise ValueError(
+                        f"UPDATE assigns unknown columns {unknown} "
+                        "(assignments must target existing columns)"
+                    )
             reader = (
                 self.spark.read.schema(sch)
                 if sch is not None
                 else self.spark.read
             )
-            # ONE pushdown scan finds the files that hold matches —
-            # parquet footer stats prune files/row-groups before any row
-            # is read, so a clustered predicate touches few files
+            scan = reader.parquet(*[a["path"] for a in live])
+            cols = scan.columns
             match = F.coalesce(cond.cast("boolean"), F.lit(False))
-            hit = {
-                r["__path"]
-                for r in reader.parquet(*[a["path"] for a in live])
-                .filter(match)
-                .select(self._canon_path_col().alias("__path"))
-                .distinct()
-                .collect()
-            }
-            if not hit:
-                return no_match()
-            touched = [a for a in live if a["path"] in hit]
-            old = reader.parquet(*[a["path"] for a in touched])
-            if self.change_feed:
-                old = old.localCheckpoint(eager=True)
-            kept = old.filter(~match)
-            if assignments is None:
-                new_df = kept
-                matched = old.filter(match)
-                cdc_frames = (
-                    [matched.withColumn("_change_type", F.lit("delete"))]
-                    if self.change_feed
-                    else []
-                )
-            else:
-                matched = old.filter(match)
-                # ALL right-hand sides evaluate against the OLD row (one
-                # select, never chained withColumn): SQL UPDATE semantics
-                # — {"x": col("y"), "y": col("x")} swaps, an assignment
-                # never observes another assignment's new value
-                from pyspark.sql import Column as _Col
-
-                def _as_expr(v):
-                    if isinstance(v, _Col):
-                        return v
-                    return F.expr(v) if isinstance(v, str) else F.lit(v)
-
-                updated = matched.select(
-                    *[
-                        _as_expr(assignments[c]).alias(c)
-                        if c in assignments
-                        else F.col(c)
-                        for c in matched.columns
-                    ]
-                )
-                # an assignment of an uncast NULL lands as the recorded type
-                updated = self._align_void_columns(updated, state["schema"])
-                self._enforce_constraints(
-                    updated, state["constraints"], "updated rows",
-                    state["schema"],
-                )
-                new_df = kept.unionByName(updated)
-                cdc_frames = (
-                    [
-                        matched.withColumn(
-                            "_change_type", F.lit("update_preimage")
-                        ),
-                        updated.withColumn(
-                            "_change_type", F.lit("update_postimage")
-                        ),
-                    ]
-                    if self.change_feed
-                    else []
-                )
-            # the rewrite keeps/updates rows of exactly the touched
-            # files: their recorded key stats model the write's key
-            # distribution with no extra job
-            range_sources = [
-                (
-                    a["min_key"],
-                    a["max_key"],
-                    int(a["rows"]) - int(a.get("null_keys") or 0),
-                )
-                for a in touched
+            assign = assignments or {}
+            # every right-hand side reads the OLD row (SQL UPDATE: a swap
+            # swaps); CASE evaluates it on matched rows only and lands an
+            # uncast NULL as the column's recorded type
+            image = [
+                F.when(match, _as_expr(assign[c])).otherwise(F.col(c)).alias(c)
+                if c in assign
+                else F.col(c)
+                for c in cols
             ]
-            if cdc_frames:
-                cdc_files, adds = self._write_fused_commit_files(
-                    new_df, cdc_frames, range_sources=range_sources
+            # the old values of the assigned columns, for pre-images
+            pre = (
+                {c: f"__pre{i}" for i, c in enumerate(cols) if c in assign}
+                if self.change_feed
+                else {}
+            )
+            rows = scan.select(
+                *image,
+                *[F.col(c).alias(n) for c, n in pre.items()],
+                match.alias("__m"),
+                # URI spelling: only the reported paths get _canon_uri
+                F.input_file_name().alias("__path"),
+            )
+            data_schema = rows.select(*cols).schema
+            # refuse a type-changing assignment before any file lands
+            schema = self._widened_schema_json(state["schema"], data_schema)
+            if assignments is not None:
+                self._enforce_constraints(
+                    rows.filter("__m").select(*cols), state["constraints"],
+                    "updated rows", state["schema"],
                 )
-            else:
-                cdc_files = []
-                adds = self._write_data_files(
-                    new_df, range_sources=range_sources
+            # whole input files go to at most files_per_commit partitions,
+            # split to balance their recorded rows, routed on the path's
+            # commit-dir/file-name tail (spelled alike in the log and in
+            # input_file_name()); the window reuses that exchange
+            def tail(p):
+                return "/".join(p.rsplit("/", 2)[-2:])
+
+            live.sort(key=lambda a: tail(a["path"]))
+            n = min(self.files_per_commit, len(live))
+            total = sum(int(a.get("rows") or 1) for a in live)
+            bounds, acc = [], 0
+            for a in live[:-1]:
+                acc += int(a.get("rows") or 1)
+                if len(bounds) < n - 1 and acc * n >= total * (len(bounds) + 1):
+                    bounds.append(tail(a["path"]))
+            route = _range_route(F.substring_index("__path", "/", -2), bounds)
+            hits = (
+                rows.withColumn("__route", route)
+                .repartition(len(bounds) + 1, "__route")
+                .withColumn("__hit", F.max("__m").over(
+                    Window.partitionBy("__route", "__path")
+                ))
+                .filter("__hit")
+                .drop("__hit", "__route")
+            )
+            cdc_dir = self._new_dir("changes") if self.change_feed else None
+            records = _rewrite_write_partitions(
+                hits,
+                self._new_dir("files"),
+                cdc_dir,
+                op,
+                self.key,
+                self._skip_cols(data_schema),
+                cols,
+                pre,
+            )
+            read = {_canon_uri(r["path"]) for r in records if r["kind"] == "read"}
+            if not read:
+                return no_match()
+            touched = [a for a in live if a["path"] in read]
+            adds = sorted(
+                (_add_action(r) for r in records if r["kind"] == "add"),
+                key=lambda a: a["path"],
+            )
+            cdc_files = (
+                self._cdc_paths(
+                    records, cdc_dir,
+                    StructType(
+                        list(data_schema.fields)
+                        + [StructField("_change_type", StringType())]
+                    ),
                 )
+                if cdc_dir is not None
+                else []
+            )
             actions = (
                 [{"add": a} for a in adds]
                 + [{"remove": {"path": a["path"]}} for a in touched]
                 + [{"cdc": {"path": p}} for p in cdc_files]
             )
-            schema = self._widened_schema_json(state["schema"], new_df.schema)
             return actions, schema, [a["path"] for a in touched]
 
         return self._commit(op, attempt, txn, max_retries)[0]
@@ -2257,52 +2290,6 @@ class TxnLogTable:
             cdc_fields + [StructField("_change_type", StringType())]
         )
         return adds, self._cdc_paths(records, cdc_dir, cdc_schema)
-
-    def _write_fused_commit_files(
-        self, data_df: DataFrame, cdc_frames: "list[DataFrame]",
-        range_sources=None,
-    ) -> "tuple[list[str], list[dict]]":
-        """Write a predicate rewrite's (``delete_where`` /
-        ``update_where``) data files AND change files in ONE Spark job:
-        the cdc union rides the data frame through the SAME key-range
-        exchange, tagged by ``__ct`` (NULL = table data, else the CDF
-        ``_change_type``), and each range partition's task splits its
-        batches into the two parquet writers
-        (:func:`_fused_write_commit_partitions`). The data rows are
-        exactly ``data_df``, the change rows exactly the union of
-        ``cdc_frames``; change files land key-range-partitioned (<=
-        files_per_commit, one per non-empty partition). Returns ``(cdc
-        part paths, add actions)``."""
-        cdc = cdc_frames[0]
-        for p in cdc_frames[1:]:
-            cdc = cdc.unionByName(p, allowMissingColumns=True)
-        fused = data_df.unionByName(
-            cdc.withColumnRenamed("_change_type", "__ct"),
-            allowMissingColumns=True,
-        )
-        boundaries = self._stats_boundaries_for(
-            data_df, self.files_per_commit, range_sources
-        )
-        clustered = self._cluster_by_key(
-            fused, self.files_per_commit, F.col(self.key), boundaries
-        )
-        cdc_dir = self._new_dir("changes")
-        records = _fused_write_commit_partitions(
-            clustered,
-            self._new_dir("files"),
-            cdc_dir,
-            self.key,
-            # stats over the DATA columns only: the fused frame's extra
-            # cdc-only columns sit past the data prefix
-            self._skip_cols(data_df.schema),
-            list(data_df.columns),
-            list(cdc.columns),
-        )
-        adds = sorted(
-            (_add_action(r) for r in records if r["kind"] == "add"),
-            key=lambda a: a["path"],
-        )
-        return self._cdc_paths(records, cdc_dir, cdc.schema), adds
 
     def _with_zvalue(
         self, df: DataFrame, cols: "list[str]", bits: int = 6
@@ -2697,11 +2684,12 @@ class TxnLogTable:
         but empty snapshot (freshly created table, or every row deleted)
         returns an empty DataFrame with the recorded schema; only a table
         with no commits at all raises."""
+        listing = self._log_listing()
         if timestamp is not None:
             if version is not None:
                 raise ValueError("pass version OR timestamp, not both")
-            version = self.version_at(timestamp)
-        state = self._fold_log(version)
+            version = self._version_at(timestamp, listing[0])
+        state = self._fold_log(version, listing)
         latest = state["versions"][-1] if state["versions"] else -1
         if latest < 0:
             raise ValueError("table has no commits")
@@ -3200,23 +3188,30 @@ class TxnLogTable:
         the ``part-*`` files under ``files/`` or ``changes/`` (``kind``)
         that are not in ``protected`` and, given a ``cutoff_ms``, were
         last modified at or before it."""
-        fs, jdir = self._fs(f"{self.path}/{kind}")
         out = []
-        if fs.exists(jdir):
-            it = fs.listFiles(jdir, True)
-            while it.hasNext():
-                st = it.next()
-                p = _canon_uri(st.getPath().toString())
-                if (
-                    p.rsplit("/", 1)[-1].startswith("part-")
-                    and p not in protected
-                    and (
-                        cutoff_ms is None
-                        or st.getModificationTime() <= cutoff_ms
-                    )
-                ):
-                    out.append(p)
+        for f in self._list_files(kind, recursive=True):
+            p = _canon_uri(f.path)
+            if (
+                f.base_name.startswith("part-")
+                and p not in protected
+                and (cutoff_ms is None or f.mtime_ns / 1e6 <= cutoff_ms)
+            ):
+                out.append(p)
         return out
+
+    def _list_files(self, sub: str, recursive: bool) -> list:
+        """The files under ``<table>/<sub>`` as pyarrow ``FileInfo`` s
+        (path in the spelling the writer kernels record, mtime) from ONE
+        filesystem listing through the ``pyarrow.fs`` filesystem the
+        kernels write with: walking a Hadoop iterator from Python costs
+        py4j round trips per entry. A missing directory lists empty."""
+        from pyarrow import fs as pafs
+
+        fsys, root = pafs.FileSystem.from_uri(f"{self.path}/{sub}")
+        sel = pafs.FileSelector(root, allow_not_found=True, recursive=recursive)
+        return [
+            f for f in fsys.get_file_info(sel) if f.type == pafs.FileType.File
+        ]
 
     def orphaned_tmp_files(self, older_than_s: float = 3600.0) -> "list[str]":
         """Unpublished temp bodies a crashed writer left in the log dir.
@@ -3224,20 +3219,15 @@ class TxnLogTable:
         must not be swept from under it."""
         import time as _time
 
-        fs, jdir = self._fs(self.log_dir)
-        if not fs.exists(jdir):
-            return []
         cutoff_ms = (_time.time() - older_than_s) * 1000.0
-        out = []
-        for st in fs.listStatus(jdir):
-            name = st.getPath().getName()
+        return sorted(
+            f"{self.log_dir}/{f.base_name}"
+            for f in self._list_files("_txn_log", recursive=False)
             # .tmp- = crashed commit publish; .wm- = crashed vacuum
             # watermark replace
-            if name.startswith((".tmp-", ".wm-")) and (
-                st.getModificationTime() <= cutoff_ms
-            ):
-                out.append(f"{self.log_dir}/{name}")
-        return sorted(out)
+            if f.base_name.startswith((".tmp-", ".wm-"))
+            and f.mtime_ns / 1e6 <= cutoff_ms
+        )
 
     def vacuum(
         self,

@@ -9,6 +9,14 @@ from data_pipeline_kafka_ek_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
 
+# The suite's live heap stays under 2 GB, but the session default heap
+# (48g) lets G1 grow the committed heap past the RAM of a 16 GB machine
+# during allocation bursts late in the suite, where the kernel OOM-kills
+# the JVM and every later test fails with ConnectionRefused. A bounded
+# heap makes G1 collect instead; set before the session fixture starts
+# the JVM, and inherited by subprocesses that build their own session.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
+
 
 def pytest_configure(config):
     config.addinivalue_line(

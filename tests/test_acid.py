@@ -7,6 +7,7 @@ merge rewrites — each proven directly against the log on disk."""
 from __future__ import annotations
 
 import json
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -319,6 +320,9 @@ def test_read_side_ops_walk_the_log_once(spark, walk_table, tmp_path):
     walk(lambda: t.read_pruned([("k", ">=", 5)]))
     walk(lambda: t.stream_changes(25))
     walk(t.history)
+    # AS OF resolution and the fold share one listing (after history(),
+    # so the publish times are cached and only the fold reads bodies)
+    walk(lambda: t.read(timestamp=time.time()))
     for b in range(3):
         t.merge(spark.createDataFrame([(b, 10 + b, "z")], _S))
     walk(mv.refresh)
@@ -346,6 +350,27 @@ def test_history_py4j_round_trips_per_commit(spark, walk_table):
         client.send_command = inner
     assert len(h) >= 32
     assert sent[0] <= 8 * len(h), sent[0]
+
+
+def test_vacuum_py4j_round_trips(spark, walk_table):
+    """A dry-run vacuum on the 32-commit table lists the part files and
+    the log directory through pyarrow in one call each, so its py4j
+    round trips are the log walk's, not one handful per part file."""
+    t = TxnLogTable(spark, walk_table.path, key="k", order_col="seq")
+    client = spark.sparkContext._gateway._gateway_client
+    inner = client.send_command
+    sent = [0]
+
+    def counted(*a, **kw):
+        sent[0] += 1
+        return inner(*a, **kw)
+
+    client.send_command = counted
+    try:
+        t.vacuum(retain_versions=10, dry_run=True)
+    finally:
+        client.send_command = inner
+    assert sent[0] <= 300, sent[0]
 
 
 def test_vacuum_protects_exactly_the_retained_snapshots(spark, tmp_path):
@@ -859,59 +884,53 @@ def test_write_data_files_single_stats_job(spark, tmp_path):
         assert a["min_key"] <= a["max_key"]
 
 
-def test_fused_commit_single_write_job(spark, tmp_path):
-    """A change-feed commit's data files AND change files come from ONE
-    write job (r16 verdict #3 / the r16 deferral #1): the cdc union
-    rides the data frame through the same key-range exchange and each
-    partition's task feeds two parquet writers. The former shape ran
-    two concurrent jobs (max(cdc, data) wall-clock, a second scan of
-    the ranked checkpoint, a separate cdc coalesce exchange). Job
-    budget: the range sampling job + the fused write (AQE splits it
-    into its shuffle-map and result jobs) — the same budget the
-    data-only writer gets in test_write_data_files_single_stats_job,
-    now covering BOTH outputs."""
-    import pyspark.sql.functions as F
-
+def test_dml_single_pass_job_budget(spark, tmp_path):
+    """A change-feed DELETE and a change-feed UPDATE each run at most two
+    Spark jobs: the scan of the candidate files (its shuffle-map job)
+    and the write, in which one kernel per partition writes the
+    replacement data file and the change images. The hit-scan and the
+    eager checkpoint of the former plan are gone, and no commit writes
+    more than files_per_commit data files."""
     t = _table(spark, tmp_path, files_per_commit=4, change_feed=True)
-    data = spark.createDataFrame(
-        [(k, 1, f"v{k}") for k in range(200)], "k long, seq long, v string"
+    t.append(
+        spark.createDataFrame(
+            [(k, 1, f"v{k}") for k in range(400)], "k long, seq long, v string"
+        )
     )
-    cdc_frames = [
-        data.filter(F.col("k") < 50).withColumn(
-            "_change_type", F.lit("insert")
-        ),
-        data.filter(F.col("k") >= 150).withColumn(
-            "_change_type", F.lit("update_postimage")
-        ),
-    ]
     sc = spark.sparkContext
-    sc.setJobGroup("acid-fused-probe", "fused commit write probe")
-    try:
-        cdc_paths, adds = t._write_fused_commit_files(data, cdc_frames)
-    finally:
-        sc.setJobGroup("acid-fused-probe-done", "")
-    jobs = sc.statusTracker().getJobIdsForGroup("acid-fused-probe")
-    assert len(jobs) <= 3, jobs
-    # data side: same stats contract as _write_data_files
-    assert sum(a["rows"] for a in adds) == 200
-    assert all(a["min_key"] <= a["max_key"] for a in adds)
-    assert len(adds) <= 4
-    # data files hold exactly the data rows, key-range disjoint
-    got = spark.read.parquet(*[a["path"] for a in adds])
-    assert sorted(r.k for r in got.collect()) == list(range(200))
-    assert sorted(got.columns) == ["k", "seq", "v"]
-    spans = sorted((a["min_key"], a["max_key"]) for a in adds)
-    for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
-        assert hi1 < lo2  # range clustering preserved
-    # cdc side: exactly the union of the tagged frames, schema intact
-    assert cdc_paths and len(cdc_paths) <= 4
-    changes = spark.read.parquet(*cdc_paths)
-    assert sorted(changes.columns) == ["_change_type", "k", "seq", "v"]
-    rows = [(r.k, r._change_type) for r in changes.collect()]
-    want = [(k, "insert") for k in range(50)] + [
-        (k, "update_postimage") for k in range(150, 200)
-    ]
-    assert sorted(rows) == sorted(want)
+
+    def jobs(group, op):
+        sc.setJobGroup(group, "predicate DML job budget")
+        try:
+            v = op()
+        finally:
+            sc.setJobGroup(group + "-done", "")
+        return v, sc.statusTracker().getJobIdsForGroup(group)
+
+    v, ids = jobs("acid-dml-delete", lambda: t.delete_where("k % 5 = 0"))
+    assert len(ids) <= 2, ids
+    h = t.history()[-1]
+    assert h["n_remove"] == 4 and h["n_add"] <= 4, h
+    assert {r.k for r in t.read().collect()} == {
+        k for k in range(400) if k % 5
+    }
+    deleted = {(r.k, r._change_type) for r in t.read_row_changes(v - 1).collect()}
+    assert deleted == {(k, "delete") for k in range(0, 400, 5)}
+
+    v, ids = jobs(
+        "acid-dml-update", lambda: t.update_where("k % 5 = 1", {"v": "'u'"})
+    )
+    assert len(ids) <= 2, ids
+    h = t.history()[-1]
+    assert h["n_remove"] == 4 and h["n_add"] <= 4, h
+    assert {r.k: r.v for r in t.read().collect()} == {
+        k: "u" if k % 5 == 1 else f"v{k}" for k in range(400) if k % 5
+    }
+    images = [(r.k, r.v, r._change_type) for r in t.read_row_changes(v - 1).collect()]
+    assert sorted(images) == sorted(
+        [(k, f"v{k}", "update_preimage") for k in range(1, 400, 5)]
+        + [(k, "u", "update_postimage") for k in range(1, 400, 5)]
+    )
 
 
 def test_murmur3_preimages_match_spark_hash(spark):
@@ -942,24 +961,22 @@ def test_murmur3_preimages_match_spark_hash(spark):
 
 def test_stats_boundary_clustering_skips_sample_job(spark, tmp_path):
     """With range_sources (touched-file stats + change bounds, all free
-    at merge time) the fused commit write derives its range boundaries
+    at merge time) the merge write derives its range boundaries
     driver-side: NO repartitionByRange sampling job — only the shuffle
     map and result jobs remain — and the written files stay key-range
     DISJOINT with every row present (bucketing is monotone in the key,
     so stats-pruning exactness never depended on the sampled
     boundaries)."""
-    import pyspark.sql.functions as F
-
     t = _table(spark, tmp_path, files_per_commit=4, change_feed=True)
     data = spark.createDataFrame(
         [(k, 1, f"v{k}") for k in range(1000)], "k long, seq long, v string"
     )
-    cdc_frames = [data.withColumn("_change_type", F.lit("insert"))]
+    stacked = data.withColumn("__src", F.lit(1))
     sc = spark.sparkContext
     sc.setJobGroup("acid-bound-probe", "stats boundary probe")
     try:
-        cdc_paths, adds = t._write_fused_commit_files(
-            data, cdc_frames, range_sources=[(0, 999, 1000)]
+        adds, cdc_paths = t._write_merge_files(
+            stacked, data.schema, None, False, range_sources=[(0, 999, 1000)]
         )
     finally:
         sc.setJobGroup("acid-bound-probe-done", "")
@@ -2298,7 +2315,8 @@ def test_feed_paths_survive_url_encodable_characters(spark, tmp_path):
     the path map silently dropped every row of every file under such a
     directory from all three feeds. Now: the spelling is percent-decoded
     (with '+' preserved — path semantics, not query-string), and any
-    residual mismatch RAISES instead of dropping rows."""
+    residual mismatch RAISES instead of dropping rows. Predicate DML
+    canonicalizes the paths its kernel reports the same way."""
     d = tmp_path / "sp ace+plus"
     t = TxnLogTable(
         spark, str(d / "tbl"), key="k", order_col="seq",
@@ -2334,6 +2352,13 @@ def test_feed_paths_survive_url_encodable_characters(spark, tmp_path):
         .collect()
     }
     assert net == {1: 1, 2: 1}
+    # predicate DML matches the paths its kernel reports to the log's
+    v = t.delete_where("k = 2")
+    assert v is not None and t.history()[-1]["n_remove"] == 1
+    assert {(r.k, r._change_type) for r in t.read_row_changes(v - 1).collect()} == {
+        (2, "delete")
+    }
+    assert {r.k for r in t.read().collect()} == {1}
 
 
 def test_schema_never_narrows_and_rewrites_preserve_evolved_columns(
@@ -3416,9 +3441,9 @@ def test_log_stats_data_skipping(spark, tmp_path):
 
 def test_dml_prune_shrinks_hit_scan(spark, tmp_path):
     """delete_where/update_where accept log-stats prune conjuncts: the
-    hit-scan's file list shrinks before any task is scheduled, results
-    are identical to the unpruned op, and an empty pruned list is a
-    clean no-op that still advances a txn cursor."""
+    list of files the one-pass rewrite scans shrinks before any task is
+    scheduled, results are identical to the unpruned op, and an empty
+    pruned list is a clean no-op that still advances a txn cursor."""
     t = _table(spark, tmp_path, files_per_commit=8)
     t.append(
         spark.createDataFrame(
@@ -4023,6 +4048,131 @@ def test_merge_kernel_edge_cases_match_python_fold(spark, tmp_path, change_feed)
     finally:
         spark.conf.set(conf, prev)
     assert "w" in t.read().columns  # the change set widened the schema
+
+
+def _python_dml(files, pred, assign, cols):
+    """Plain-Python predicate DML fold, the oracle for the one-pass
+    rewrite kernel. ``files`` maps each live path to its rows; ``pred``
+    maps a row dict to True/False/None (only True matches); ``assign``
+    maps a matched row dict to its new values (None: DELETE). Returns
+    (snapshot rows, change images, touched paths, rows of the
+    replacement files)."""
+    snap, images, touched, rewritten = [], [], set(), []
+    for path, rows in files.items():
+        dicts = [dict(zip(cols, r)) for r in rows]
+        if not any(pred(d) is True for d in dicts):
+            snap.extend(rows)
+            continue
+        touched.add(path)
+        for r, d in zip(rows, dicts):
+            if pred(d) is not True:
+                out = [r]
+            elif assign is None:
+                images.append(r + ("delete",))
+                out = []
+            else:
+                new = tuple({**d, **assign(d)}[c] for c in cols)
+                images += [r + ("update_preimage",), new + ("update_postimage",)]
+                out = [new]
+            snap.extend(out)
+            rewritten.extend(out)
+    return snap, images, touched, rewritten
+
+
+@pytest.mark.parametrize("change_feed", [True, False])
+def test_dml_kernel_edge_cases_match_python_fold(spark, tmp_path, change_feed):
+    """The one-pass DELETE/UPDATE kernel, with 2-row Arrow batches so a
+    file's rows straddle batches: NULL-predicate rows are kept, swapped
+    assignments swap, a key-changing UPDATE keeps pruning exact for a
+    later merge and read_pruned, a DELETE that empties whole files
+    removes them with no replacement add, a no-match statement with a
+    txn cursor advances the cursor without a data commit, and a
+    concurrent rewrite of a touched file raises. Each commit's
+    snapshot, change images (change feed on) or add-file feed (off),
+    and n_add/n_remove equal the plain-Python fold."""
+    t = _table(spark, tmp_path, files_per_commit=2, change_feed=change_feed)
+    cols = ["k", "seq", "a", "b", "x"]
+    schema = "k long, seq long, a double, b double, x double"
+
+    def row(k):
+        return (k, 0, float(k), 10.0 * k, None if k % 4 == 1 else 10.0 * k)
+
+    t.append(spark.createDataFrame([row(k) for k in range(12)], schema))
+    t.append(spark.createDataFrame([row(k) for k in range(20, 24)], schema))
+
+    def on_disk():
+        return {
+            a["path"]: [
+                tuple(r) for r in spark.read.parquet(a["path"]).select(*cols).collect()
+            ]
+            for a in _live_adds(t)
+        }
+
+    def snapshot():
+        return sorted(tuple(r) for r in t.read().select(*cols).collect())
+
+    def check(op, pred, assign):
+        snap, images, touched, rewritten = _python_dml(on_disk(), pred, assign, cols)
+        v = op()
+        assert snapshot() == sorted(snap)
+        h = t.history()[-1]
+        assert h["n_remove"] == len(touched) and h["n_add"] <= 2, h
+        if not rewritten:
+            assert h["n_add"] == 0, h
+        if change_feed:
+            got = t.read_row_changes(v - 1).select(*cols, "_change_type")
+            assert sorted(tuple(r) for r in got.collect()) == sorted(images)
+        else:
+            got = t.read_changes(v - 1).select(*cols)
+            assert sorted(tuple(r) for r in got.collect()) == sorted(rewritten)
+        return rewritten
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        # the second append's files hold only k >= 20: emptied whole
+        assert check(
+            lambda: t.delete_where("k >= 20"), lambda d: d["k"] >= 20, None,
+        ) == []
+        # x is NULL for k % 4 == 1: those rows are kept
+        check(
+            lambda: t.delete_where("x > 50"),
+            lambda d: None if d["x"] is None else d["x"] > 50, None,
+        )
+        check(
+            lambda: t.update_where("k < 4", {"a": F.col("b"), "b": F.col("a")}),
+            lambda d: d["k"] < 4, lambda d: {"a": d["b"], "b": d["a"]},
+        )
+        check(
+            lambda: t.update_where(
+                (F.col("k") >= 1) & (F.col("k") < 4), {"k": F.col("k") + 100}
+            ),
+            lambda d: 1 <= d["k"] < 4, lambda d: {"k": d["k"] + 100},
+        )
+        # the moved keys' file stats are exact: a merge of key 101 finds
+        # its stored row, and a pruned read sees every moved row
+        t.merge(spark.createDataFrame([(101, 5, 0.0, 0.0, 1.0)], schema))
+        want = {
+            r for r in snapshot() if r[0] >= 100 and r[0] != 101
+        } | {(101, 5, 0.0, 0.0, 1.0)}
+        moved = t.read_pruned([("k", ">=", 100)]).select(*cols).collect()
+        assert {tuple(r) for r in moved if r.k >= 100} == want
+        assert len(moved) == len({r.k for r in moved})
+        head = t.latest_version()
+        assert t.delete_where(
+            F.col("x") > 1e9, txn={"app_id": "edge", "batch_id": 1}
+        ) is None
+        assert t.latest_version() == head + 1
+        assert t._read_commit(head + 1)["actions"] == []
+        assert t.txn_high_water("edge") == 1
+        target = [a["path"] for a in _live_adds(t) if a["min_key"] == 0]
+        _inject_racing_commit(t, lambda: [{"remove": {"path": target[0]}}])
+        with pytest.raises(ConcurrentModification, match="files this"):
+            t.update_where("k = 0", {"x": 1.0})
+        assert t.latest_version() == head + 2
+    finally:
+        spark.conf.set(conf, prev)
 
 
 def test_merge_single_pass_job_budget(spark, tmp_path):
